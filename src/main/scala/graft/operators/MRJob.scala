@@ -22,8 +22,15 @@ import org.apache.spark.sql.functions.col
   *  - per-key reduce then add-merge of per-chunk results — the reference only
   *    supports combiner-style monoid aggregation
   *    (`framework-src/ReduceRunner.java:78-122,154-172`, `AddInterface.java:
-  *    10-12`) -> `groupByKey.reduceGroups`, which is exactly Spark's
-  *    partial+final aggregation;
+  *    10-12`) -> an in-mapper combine per input partition (the per-chunk
+  *    reduce, see `MRPairs.reduceByKeyArrivalOrder`) followed by a
+  *    sort-grouped final merge, `groupByKey.mapGroups`, which can spill.
+  *    The typed `groupByKey.reduceGroups` path is not used: it plans an
+  *    `ObjectHashAggregate` that falls back to a row-at-a-time sort-based
+  *    aggregate once a task has seen 128 distinct keys
+  *    (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`). No
+  *    session conf is changed to avoid that, since the threshold holds for
+  *    every typed aggregate and `collect_*` in the engine;
   *  - sink: tab-separated text, one file per reducer
   *    (`framework-src/ReduceRunner.java:113-122`, `RecordWriter.java:20-28`)
   *    -> per-partition CSV write with a tab separator.
@@ -42,7 +49,7 @@ object MRJob {
   /** O2+O3 with the reference's RECORD-COUNT chunk split made explicit:
     * the `graft-chunks` DSV2 connector plans one Spark input partition per
     * reference chunk (`MasterNode.splitInputFile` numbering), so the
-    * facade's partial aggregation runs once per chunk — exactly the
+    * facade's in-mapper combine runs once per chunk — exactly the
     * reference's per-(key, chunk) mini-reduce before add-merge
     * (`ReduceRunner.java:154-172`, SURVEY §1.3.3). `textDir` gets the same
     * semantics from Spark's byte-range splits (the scale path); this entry
@@ -85,29 +92,34 @@ final class MRPairs[K, V](val pairs: Dataset[(K, V)]) {
     * `merge` must be associative+commutative, which is the precondition the
     * reference silently imposes too (SURVEY.md §1.3.3). */
   def reduceByKey(merge: (V, V) => V)(
-      implicit ek: Encoder[K], ekv: Encoder[(K, V)],
-      ekkv: Encoder[(K, (K, V))]): MRPairs[K, V] =
+      implicit ek: Encoder[K], ekv: Encoder[(K, V)]): MRPairs[K, V] =
     reduceByKeyArrivalOrder(merge)
 
   /** Reference-exact arrival-order merge — the unsorted `Text.add` parity
     * mode. The reference folds per-chunk results in whatever order chunks
     * complete (`framework-src/ReduceRunner.java:154-172` calling `Text.java:
     * 29-32` concat), so for non-commutative `merge` its output depends on
-    * chunk scheduling, run to run. `reduceGroups` has exactly those
-    * semantics on Spark: values fold in iterator order within each input
-    * partition and partials merge in completion order. With a single input
-    * partition the fold order is the input order (deterministic); with many,
-    * the result is some association of the inputs — faithful to the
-    * reference, non-determinism included. Prefer [[reduceGroupsSorted]]
-    * unless bit-parity with a reference run matters. */
+    * chunk scheduling, run to run. The lowering has the same semantics:
+    * each input partition folds its values per key in iterator order into a
+    * hash map of at most `MRPairs.CombineBound` partials, emitting and
+    * clearing the map whenever it fills; the partials of a key then meet in
+    * a sort-grouped `mapGroups` and fold in shuffle-fetch order. With a
+    * single input partition holding at most `CombineBound` distinct keys
+    * the fold order is the input order (deterministic); past the bound, or
+    * with many partitions, the result is some association of the inputs —
+    * faithful to the reference, non-determinism included. The combine map
+    * compares keys by JVM equality, the final merge by Catalyst grouping;
+    * partials the combine keeps apart (e.g. `Array[Byte]` keys, `0.0` and
+    * `-0.0`) are merged there. Prefer [[reduceGroupsSorted]] unless
+    * bit-parity with a reference run matters. */
   def reduceByKeyArrivalOrder(merge: (V, V) => V)(
-      implicit ek: Encoder[K], ekv: Encoder[(K, V)],
-      ekkv: Encoder[(K, (K, V))]): MRPairs[K, V] =
+      implicit ek: Encoder[K], ekv: Encoder[(K, V)]): MRPairs[K, V] =
     new MRPairs(
       pairs
+        .mapPartitions(MRPairs.combine(merge))
         .groupByKey(_._1)
-        .reduceGroups((a: (K, V), b: (K, V)) => (a._1, merge(a._2, b._2)))
-        .map(_._2))
+        .mapGroups((k: K, it: Iterator[(K, V)]) =>
+          (k, it.map(_._2).reduce(merge))))
 
   /** Deterministic stand-in for order-sensitive merges (`Text.add` concat,
     * `framework-src/Text.java:29-32`): values are sorted before folding, so
@@ -135,4 +147,43 @@ final class MRPairs[K, V](val pairs: Dataset[(K, V)]) {
       .option("sep", "\t")
       .mode("overwrite")
       .csv(path)
+}
+
+object MRPairs {
+
+  /** Most partials an in-mapper combine holds before it emits them. It
+    * bounds a task's combine memory whatever the key cardinality, and is
+    * large enough to hold a text corpus's vocabulary per task, so each
+    * partition usually emits one partial per distinct key. */
+  private[graft] val CombineBound = 65536
+
+  /** In-mapper combiner: folds each key's values in arrival order into a
+    * map of at most `CombineBound` partials and emits the map's contents
+    * whenever it fills or the input ends. */
+  private[graft] def combine[K, V](merge: (V, V) => V)(
+      in: Iterator[(K, V)]): Iterator[(K, V)] = new Iterator[(K, V)] {
+    private val partials = new java.util.HashMap[K, V]()
+    private var out: java.util.Iterator[java.util.Map.Entry[K, V]] =
+      partials.entrySet.iterator
+
+    def hasNext: Boolean = out.hasNext || in.hasNext && { fill(); out.hasNext }
+
+    def next(): (K, V) = {
+      if (!hasNext) throw new NoSuchElementException("combine: input exhausted")
+      val e = out.next()
+      (e.getKey, e.getValue)
+    }
+
+    private def fill(): Unit = {
+      partials.clear()
+      while (in.hasNext && partials.size < CombineBound) {
+        val (k, v) = in.next()
+        val prev = partials.get(k)
+        // a stored null value is a partial too: only an absent key starts one
+        partials.put(k,
+          if (prev == null && !partials.containsKey(k)) v else merge(prev, v))
+      }
+      out = partials.entrySet.iterator
+    }
+  }
 }

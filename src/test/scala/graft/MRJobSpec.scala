@@ -1,7 +1,9 @@
 package graft
 
-import graft.operators.MRJob
+import graft.operators.{MRJob, MRPairs}
 import java.nio.file.Files
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.functions.sum
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reference-parity behavior of the MRJob facade: text-dir source, flatMap
@@ -106,6 +108,66 @@ class MRJobSpec extends AnyFunSuite {
         sequential(k).split('|').sorted.toSeq)
   }
 
+  test("combiner flushes past its bound: one partition still counts exactly") {
+    // more distinct keys than the combine map holds, each seen three times
+    // in round-robin order, so every key's values fall into several flushes
+    val n = MRPairs.CombineBound + 1000
+    val ds = spark.range(0, 3L * n, 1, 1).map(i => (i % n, 1L))
+    assert(ds.rdd.getNumPartitions == 1)
+    val emitted = MRPairs.combine[Long, Long](_ + _)(
+      Iterator.range(0, 3 * n).map(i => (i % n).toLong -> 1L)).size
+    assert(emitted > n, s"$emitted partials for $n keys: no flush happened")
+    val got = MRJob(ds).mapToPairs(Iterator.single(_)).reduceByKey(_ + _)
+      .pairs.collect()
+    val want = ds.toDF("k", "v").groupBy("k").count().as[(Long, Long)]
+      .collect()
+    assert(got.length == n)
+    assert(got.toMap == want.toMap)
+  }
+
+  /** `reduceByKey` and a DataFrame `groupBy(k).agg(sum(v))` on the same
+    * single-partition pairs, each as rows (`norm(key)`, sum) in one order. */
+  private def reduceVsGroupBy[K](kvs: Seq[(K, Long)], norm: K => Any = (k: K) => k)(
+      implicit ek: Encoder[K], ekv: Encoder[(K, Long)]): (Seq[(Any, Long)], Seq[(Any, Long)]) = {
+    val ds = spark.createDataset(kvs).coalesce(1)
+    val got = MRJob(ds).mapToPairs(Iterator.single(_)).reduceByKey(_ + _)
+      .pairs.collect().toSeq
+    val want = ds.toDF("k", "v").groupBy("k").agg(sum("v")).as[(K, Long)]
+      .collect().toSeq
+    def rows(r: Seq[(K, Long)]) =
+      r.map { case (k, v) => (norm(k), v) }.sortBy(_.toString)
+    (rows(got), rows(want))
+  }
+
+  test("key semantics: the final merge groups as Catalyst does, " +
+      "whatever the combiner's JVM equality kept apart") {
+    val tuples = (0 until 60).map(i => ((i % 4, s"k${i % 3}"), i.toLong))
+    val (gotT, wantT) = reduceVsGroupBy(tuples)
+    assert(gotT.size == 12 && gotT == wantT)
+
+    val cases = (0 until 60).map(i => (MRKey(i % 4, s"k${i % 3}"), i.toLong))
+    val (gotC, wantC) = reduceVsGroupBy(cases)
+    assert(gotC.size == 12 && gotC == wantC)
+
+    // a fresh array per row: the combiner's reference equality keeps every
+    // row apart, the final merge groups by content
+    val bytes = (0 until 60).map(i => (Array[Byte](1, (i % 5).toByte), i.toLong))
+    val (gotB, wantB) = reduceVsGroupBy(bytes, (k: Array[Byte]) => k.toSeq)
+    assert(gotB.size == 5 && gotB == wantB)
+
+    // the combiner keeps 0.0 and -0.0 apart (Double.equals); Catalyst
+    // merges them and every NaN bit pattern into one group each
+    val nan1 = java.lang.Double.longBitsToDouble(0x7ff8000000000000L)
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff0000000000001L)
+    assert(nan1.isNaN && nan2.isNaN)
+    val doubles = Seq(0.0, -0.0, nan1, nan2, 1.5, -0.0, nan2, 0.0)
+      .zipWithIndex.map { case (d, i) => (d, 1L << i) }
+    val (gotD, wantD) = reduceVsGroupBy(doubles,
+      (d: Double) => if (d.isNaN) "NaN" else if (d == 0.0) "0.0" else d.toString)
+    assert(gotD == Seq(("0.0", 1L + 2 + 32 + 128), ("1.5", 16L), ("NaN", 4L + 8 + 64)))
+    assert(gotD == wantD)
+  }
+
   test("startjob CLI: wordcount over the reference input matches the golden") {
     // the reference's own invocation shape (Driver.java:63-68):
     //   startjob wordcount <jar> <in> <out> <n>
@@ -187,3 +249,6 @@ class CharCountJob extends graft.MRClientJob {
   override def merge(a: String, b: String): String =
     (a.toLong + b.toLong).toString
 }
+
+/** A case-class key for the key-semantics test. */
+case class MRKey(a: Int, b: String)
