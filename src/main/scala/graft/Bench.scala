@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec",...}.
@@ -41,21 +41,9 @@ object Bench {
       }
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = Sessions.master(s"local[$cpus]")
-    val spark = Sessions.forMaster(SparkSession.builder(), master)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", Sessions.warehouseDir())
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k2=v2": session-conf pins for measurement runs
-    // (e.g. graft.graph.triangleImpl=wedge to time the fallback path).
-    Sessions.applyEnvConf(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val entries = Runner.select(SparkEntry.queries)
+    val spark = Sessions.build("graft-bench", Sessions.master(s"local[$cpus]"), cpus)
     // Default TWO passes: pass 1 cold (JIT + codegen compile included),
     // pass 2 warm — the shape a long-lived cluster sees. Per-query times
     // are the MIN across passes (a one-off host-contention spike on any
@@ -83,66 +71,41 @@ object Bench {
         }
       })
     var shuffleMb = Map.empty[String, (Double, Double)] // pass-1 (write, spill)
-    // per pass: name -> (elapsed, succeeded)
-    var passResults = Seq.empty[Seq[(String, (Double, Boolean))]]
-    var failed = Seq.empty[String] // accumulated across passes, tagged @p<N>
-    for (pass <- 1 to passes) {
-      // A warm pass must re-pay memoized work (the q55/q57/q99 cluster map)
-      // or its timings would exclude the clustering compute entirely.
-      if (pass > 1) queries.Dedup.clearCcCache()
-      // SPARK_GRAFT_ONLY (same contract as Verify): comma-separated names,
-      // for timing a query in isolation while iterating on its plan.
-      val only = sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).toSet)
-      passResults :+= SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-        .map { case (name, fn) =>
+    val runs = Runner.run("bench", spark, sfDir, entries, passes, new Runner.Sink {
+      private var w0, s0 = 0L
+      override def before(name: String, pass: Int): Unit = {
         org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-        val (w0, s0) = (shufW.get, spill.get)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            failed :+= (if (passes == 1) name else s"$name@p$pass")
-            false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        if (pass == 1) {
-          org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-          shuffleMb += name -> (((shufW.get - w0) / 1e6, (spill.get - s0) / 1e6))
-        }
-        name -> ((elapsed, ok))
+        w0 = shufW.get; s0 = spill.get
       }
-    }
+      def write(name: String, df: DataFrame): Unit =
+        df.write.format("noop").mode("overwrite").save()
+      override def after(o: Runner.Outcome): Unit = if (o.pass == 1) {
+        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+        shuffleMb += o.name -> (((shufW.get - w0) / 1e6, (spill.get - s0) / 1e6))
+      }
+    })
+    val failed = Runner.failed(runs)
     // min across SUCCESSFUL passes, in the stable pass-1 query order — a
     // pass that threw early must not report its short elapsed as a speedup;
     // a query that never succeeded falls back to min over all its passes.
-    val results = passResults.head.map { case (name, _) =>
-      val runs = passResults.map(_.toMap.apply(name))
-      val good = runs.filter(_._2).map(_._1)
-      name -> (if (good.nonEmpty) good.min else runs.map(_._1).min)
+    val results = runs.transpose.map { rs =>
+      val good = rs.filter(_.ok).map(_.seconds)
+      rs.head.name -> (if (good.nonEmpty) good.min else rs.map(_.seconds).min)
     }
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     // The driver keeps only the LAST ~2000 chars of output and parses the
     // JSON line out of that tail; with ~100 queries the full-name map blows
     // that budget and the line arrives truncated (unparseable). stdout gets
-    // short keys (the unique qNN prefix before the first underscore) to stay
-    // well under the window; the full-name map goes to bench_full.json.
-    // qNN prefixes must stay unique or two queries would silently share a
-    // JSON key on the stdout line (one timing dropped, no error anywhere).
-    val shortKeys = results.map(_._1.takeWhile(_ != '_'))
-    require(shortKeys.distinct.size == shortKeys.size,
-      "duplicate short query keys: " +
-        shortKeys.diff(shortKeys.distinct).distinct.mkString(", "))
+    // short keys (Runner.shortKey, unique per run) to stay well under the
+    // window; the full-name map goes to bench_full.json.
     val qs = results.map { case (k, v) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + f"$v%.3f"
+      "\"" + Runner.shortKey(k) + "\":" + f"$v%.3f"
     }.mkString("{", ",", "}")
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fsShort = (if (failed.size > 10) failed.take(10) :+ s"+${failed.size - 10}_more" else failed)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val passTotals = passResults.map(r => f"${r.map(_._2._1).sum}%.3f")
+    val passTotals = runs.map(r => f"${r.map(_.seconds).sum}%.3f")
       .mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val shufJson = results.map { case (k, _) =>

@@ -29,7 +29,11 @@ trait MRClientJob extends Serializable {
   * through the [[graft.operators.MRJob]] facade (chunked DSV2 input when
   * `NUM_RECORDS_PER_CHUNK` is configured, Spark byte-range splits
   * otherwise), and writes file-per-reducer TSV through the `graft-tsv`
-  * manifest-committing sink. `master`/`slave` bootstrap verbs
+  * manifest-committing sink. The session is [[Sessions.build]]'s, like
+  * every graft main's: 32 shuffle partitions, the graft extensions, the
+  * UTC time zone and WARN logging; the master is `spark-submit --master`'s
+  * when set, else `SPARK_GRAFT_MASTER`, else `local[*]`
+  * ([[Sessions.master]]). `master`/`slave` bootstrap verbs
   * (`Driver.java:72-79`) have no standalone-daemon equivalent — cluster
   * formation is Spark's job (`spark-submit --master`), and the CLI says so
   * rather than pretending.
@@ -80,16 +84,10 @@ object Driver {
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("startjob") if args.length == 6 =>
       val Array(_, jobName, jarPath, inDir, outDir, nStr) = args
-      val master = sys.env.getOrElse("SPARK_MASTER", Sessions.master("local[*]"))
       val clientJars =
         if (new java.io.File(jarPath).isFile) Seq(jarPath) else Nil
-      val spark = Sessions.forMaster(SparkSession.builder(), master, clientJars)
-        .master(master)
-        .appName(s"graft-$jobName")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", Sessions.warehouseDir())
-        .getOrCreate()
+      val spark = Sessions.build(s"graft-$jobName", Sessions.master("local[*]"),
+        32, clientJars)
       val n =
         try nStr.toInt
         catch { case e: NumberFormatException =>

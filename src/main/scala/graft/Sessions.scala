@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-construction helpers shared by the engine's mains ([[Verify]],
-  * [[Bench]], [[Driver]]).
+/** The one session builder for the engine's mains ([[Verify]], [[Bench]],
+  * [[Driver]], the example apps, the tools) and the test harness.
   *
   * The point of the master override is the EXECUTOR BOUNDARY: every run of
   * this engine before round 9 was `local[*]` — one JVM, where closure
@@ -17,11 +17,46 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** Resolve a main's master: `SPARK_GRAFT_MASTER` overrides the default
-    * `local[...]` so the same entry point runs single-JVM or across a real
-    * executor boundary without code changes. */
+  /** Resolve a main's master: the `spark.master` system property (what
+    * `spark-submit --master` sets) wins, then `SPARK_GRAFT_MASTER`, then
+    * the caller's `local[...]` default, so the same entry point runs
+    * single-JVM, across a real executor boundary, or on a cluster without
+    * code changes. A master set in code would override spark-submit's. */
   def master(default: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_MASTER", default)
+    sys.props.get("spark.master")
+      .orElse(sys.env.get("SPARK_GRAFT_MASTER"))
+      .getOrElse(default)
+
+  /** Build (or join) the process's session. Every caller gets the same
+    * conf; only the arguments differ:
+    *  - `spark.sql.shuffle.partitions` = `partitions`, the UTC session
+    *    time zone, a per-process [[warehouseDir]];
+    *  - [[graft.functions.GraftExtensions]] and every key of
+    *    [[Tables.sessionConf]];
+    *  - the UI disabled and the log level WARN;
+    *  - [[applyEnvConf]] last, so `SPARK_GRAFT_CONF` overrides any of them.
+    *
+    * `extraJars` are client jars whose classes appear in task closures
+    * (see [[forMaster]]). */
+  def build(app: String, master: String, partitions: Int,
+      extraJars: Seq[String] = Nil): SparkSession = {
+    val b = forMaster(SparkSession.builder(), master, extraJars)
+      .master(master)
+      .appName(app)
+      .config("spark.sql.warehouse.dir", warehouseDir())
+    conf(partitions).foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    applyEnvConf(spark)
+    spark
+  }
+
+  /** The fixed part of [[build]]'s conf (all but the warehouse dir). */
+  private[graft] def conf(partitions: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> partitions.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName,
+    "spark.ui.enabled" -> "false") ++ Tables.sessionConf
 
   /** Executors spawned by a `local-cluster` master get SPARK_HOME's jars,
     * NOT the launching JVM's classpath — ship the engine's own compiled
@@ -39,7 +74,7 @@ object Sessions {
     * rides the ONE fetched-jars loader, so the mixed-loader topology is
     * specific to classes-dir launches; keeping engine and client on the
     * same parent classpath here restores the single-loader invariant. */
-  def forMaster(b: SparkSession.Builder, master: String,
+  private[graft] def forMaster(b: SparkSession.Builder, master: String,
       extraJars: Seq[String] = Nil): SparkSession.Builder =
     if (master.startsWith("local-cluster")) {
       val here = getClass.getProtectionDomain.getCodeSource.getLocation.getPath

@@ -40,13 +40,8 @@ object ScaleUp {
       else None
     val f = fStr.toInt
     require(f >= 1, s"factor must be >= 1, got $f")
-    val spark = SparkSession.builder()
-      .master(graft.Sessions.master("local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build("graft-scaleup",
+      graft.Sessions.master("local[32]"), 32)
     run(spark, src, dst, f, only)
     spark.stop()
   }

@@ -89,7 +89,7 @@ python3 tools/check.py "$WORK/verify_wedge" "$SF" | tail -3
 echo "== [3/4] CLI built-in job (startjob argv contract)"
 mkdir -p "$WORK/cli_in"
 printf 'hello world hello\nfoo ba r foo\n' > "$WORK/cli_in/input.txt"
-SPARK_MASTER="$MASTER" \
+SPARK_GRAFT_MASTER="$MASTER" \
   sbt -batch "runMain graft.Driver startjob wordcount - $WORK/cli_in $WORK/cli_wc 3" \
   >"$WORK/cli_wc.log" 2>&1 || { tail -30 "$WORK/cli_wc.log"; exit 1; }
 got=$(cat "$WORK"/cli_wc/part-*.tsv | LC_ALL=C sort)
@@ -101,7 +101,7 @@ echo "== [4/4] CLI client jar (manifest Main-Class closure on executors)"
 sbt -batch "Test/compile" >"$WORK/testc.log" 2>&1
 jar --create --file "$WORK/client.jar" --main-class graft.CharCountJob \
   -C target/scala-2.13/test-classes graft/CharCountJob.class
-SPARK_MASTER="$MASTER" \
+SPARK_GRAFT_MASTER="$MASTER" \
   sbt -batch "runMain graft.Driver startjob charcount $WORK/client.jar $WORK/cli_in $WORK/cli_cc 3" \
   >"$WORK/cli_cc.log" 2>&1 || { tail -30 "$WORK/cli_cc.log"; exit 1; }
 got=$(cat "$WORK"/cli_cc/part-*.tsv)
