@@ -55,15 +55,15 @@ object Runner {
   }
 
   /** Run `entries` for `passes` passes through `sink`; returns the
-    * outcomes per pass, each in `entries` order. A warm pass first clears
-    * the memoized clustering (the q55/q57/q99 cluster map), or its timings
-    * would exclude that compute. A failure is printed as
+    * outcomes per pass, each in `entries` order. A warm pass first runs
+    * [[queries.Memo.clear]], so it re-pays every memoized frame (fixture
+    * templates survive; see [[queries.Memo]]). A failure is printed as
     * `[<tag>] <name> failed: ...` and the run goes on; the ledger line
     * closes the run on stderr. */
   def run(tag: String, spark: SparkSession, sfDir: String,
       entries: Seq[(String, Query)], passes: Int, sink: Sink): Seq[Seq[Outcome]] = {
     val outcomes = (1 to passes).map { pass =>
-      if (pass > 1) queries.Dedup.clearCcCache()
+      if (pass > 1) queries.Memo.clear()
       entries.map { case (name, fn) =>
         sink.before(name, pass)
         val t0 = System.nanoTime()

@@ -93,11 +93,13 @@ object Sessions {
     * separate schemas; two concurrent Verify/Bench runs can never
     * interfere. `SPARK_GRAFT_WAREHOUSE` overrides for workflows that
     * WANT a shared, durable warehouse (the matview attach()-across-JVMs
-    * path), accepting the one-writer-at-a-time contract that implies. */
+    * path), accepting the one-writer-at-a-time contract that implies.
+    * The temp warehouse is deleted with its tables at JVM exit; an
+    * override is the user's and is never deleted. */
   def warehouseDir(): String =
     sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", {
       val d = java.nio.file.Files.createTempDirectory("graft_wh")
-      d.toFile.deleteOnExit()
+      streaming.EventStreams.deleteTreeOnExit(d)
       d.toString
     })
 

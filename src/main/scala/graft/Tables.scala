@@ -100,26 +100,26 @@ object Tables {
     * production multi-split input `df` is returned untouched, so this
     * never forces a cores-sized partition count at 100 TB. */
   def spreadBy(spark: SparkSession, dir: String, name: String,
-      df: DataFrame, keys: Column*): DataFrame = {
-    val bytes = fingerprint(spark, s"$dir/$name.parquet").map(_._2).sum
-    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    val cores = spark.sparkContext.defaultParallelism
-    val plannedTasks = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    if (plannedTasks < cores) df.repartition(cores, keys: _*) else df
-  }
+      df: DataFrame, keys: Column*): DataFrame =
+    spreadTarget(spark, s"$dir/$name.parquet").fold(df)(df.repartition(_, keys: _*))
 
   /** [[spread]] for any file/directory input — including a staged
     * bounded-stream source dir, where the same single-file layout makes
     * every micro-batch's map stage one task. Works on streaming frames
     * (the exchange is stateless and order-free consumers are unaffected). */
-  def spreadPath(spark: SparkSession, path: String, df: DataFrame): DataFrame = {
+  def spreadPath(spark: SparkSession, path: String, df: DataFrame): DataFrame =
+    spreadTarget(spark, path).fold(df)(df.repartition(_))
+
+  /** The gate of [[spread]]: the session's core count when the planner's
+    * split math (input bytes / maxPartitionBytes) gives a scan of `path`
+    * fewer tasks than cores, else None. */
+  private def spreadTarget(spark: SparkSession, path: String): Option[Int] = {
     val bytes = fingerprint(spark, path).map(_._2).sum
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     val cores = spark.sparkContext.defaultParallelism
     val plannedTasks = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    if (plannedTasks < cores) df.repartition(cores) else df
+    if (plannedTasks < cores) Some(cores) else None
   }
 
   /** Normalize an `events.ts` column to `TimestampType` regardless of how

@@ -858,21 +858,14 @@ object CatalogQueries {
     * aggregate read through the pruned catalog scan. At 100 TB: one
     * layout serves three access paths at ~∛fraction scan cost each,
     * instead of three sorted copies. */
-  private val z3StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[(String, Long, Long)]), (String, Long, Long, Long)]()
-
   def catZorder3(spark: SparkSession, dir: String): DataFrame = {
-    // staged-lineitem fixture template, cloned per run (the initStore
-    // discipline): the linear-clustered base commit + the three key
-    // maxima are pure functions of the input files, and re-staging them
-    // per run was half this entry's wall time. The compact/analyze/probe
-    // chain under measurement runs fully on the clone every time.
-    val (src, mo, mp, ms) = z3StageMemo.computeIfAbsent(
-      (dir, graft.Tables.fingerprint(spark, s"$dir/lineitem.parquet")), _ => {
-        val out = java.nio.file.Files.createTempDirectory("graft_cat_z3t")
-        graft.streaming.EventStreams.deleteTreeOnExit(out)
-        val tmpl = s"$out/t"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmpl))
+    // staged-lineitem fixture, cloned per run: the linear-clustered base
+    // commit + the three key maxima are pure functions of the input
+    // files, and re-staging them per run was half this entry's wall time.
+    // The compact/analyze/probe chain under measurement runs fully on the
+    // clone every time.
+    val (root, (mo, mp, ms)) =
+      Memo.fixture("cat_li_z3", spark, dir, SnapshotStore.cloneRoot) { tmpl =>
         val li = graft.Tables(spark, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
             col("l_quantity"), col("l_returnflag"))
@@ -880,10 +873,8 @@ object CatalogQueries {
           li.repartitionByRange(16, col("l_orderkey")), "base"), 0)
         val mx = li.agg(max(col("l_orderkey")), max(col("l_partkey")),
           max(col("l_suppkey"))).head()
-        (tmpl, mx.getLong(0), mx.getLong(1), mx.getLong(2))
-      })
-    val root = Lakehouse.freshRoot()
-    SnapshotStore.cloneRoot(spark, src, root)
+        (mx.getLong(0), mx.getLong(1), mx.getLong(2))
+      }
     GraftCatalog.register(spark, "cat_li_z3", root)
     def slice(m: Long) = (m / 4, m / 4 + m / 8)
     val keys = Seq("l_orderkey" -> slice(mo),

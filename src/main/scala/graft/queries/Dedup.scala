@@ -757,11 +757,9 @@ object Dedup {
     * loop run once per session, exactly as a pipeline would materialize the
     * cluster map once and join it everywhere. */
 
-  /** Drop all memoized intermediates (cluster maps, span/winnow/signature
-    * indexes — see [[Memo]]). `Bench` calls this between passes so a warm
-    * pass re-pays the compute instead of reusing the first pass's
-    * checkpointed result. */
-  private[graft] def clearCcCache(): Unit = Memo.clearAll()
+  /** [[Memo.clear]] under its older name, which perfbench's harness
+    * calls between passes. */
+  private[graft] def clearCcCache(): Unit = Memo.clear()
 
   def dupClusters(spark: SparkSession, dir: String): DataFrame =
     Memo("cc", spark, dir)(computeDupClusters(spark, dir))

@@ -68,42 +68,26 @@ object Lakehouse {
     }
   }
 
-  /** Clustered-orders fixture templates: the COW entries (q288/q289/q290)
-    * each staged the SAME range-clustered orders layout with a fresh
-    * repartitionByRange + write per run — fixture setup, not the measured
-    * mutation. Template per (dir, orders fingerprint, key, nFiles),
-    * cloned per run by file copy (the [[initStore]] discipline — the
-    * queries mutate their copy in place, so each run gets its own). */
-  private val clusteredMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[(String, Long, Long)], String, Int), String]()
-
-  /** The orders table clustered by `key` into ~`nFiles` files (each file
+  /** The orders table clustered by `o_orderkey` into ~8 files (each file
     * owns a key interval — the precondition every stats-pruned mutation
     * shares with q125's z-order clustering), in a fresh mutable temp
-    * layout cloned from the per-(dir, fingerprint) template. */
-  private def writeClustered(spark: SparkSession, dir: String, key: String,
-      nFiles: Int, tag: String): String = {
+    * layout. The COW entries (q288/q289/q290) mutate their copy in place,
+    * so the layout is a [[Memo.fixture]] cloned per run by a plain file
+    * copy: it has no manifest to rewrite. */
+  private def writeClustered(spark: SparkSession, dir: String): String =
+    Memo.fixture("cow_orders", spark, dir, copyFiles) { layout =>
+      Tables(spark, dir, "orders")
+        .repartitionByRange(8, col("o_orderkey"))
+        .write.mode("append").parquet(layout)
+    }._1
+
+  private def copyFiles(spark: SparkSession, src: String, dst: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val tmpl = clusteredMemo.computeIfAbsent(
-      (dir, graft.Tables.fingerprint(spark, s"$dir/orders.parquet"),
-        key, nFiles), _ => {
-        val out = Files.createTempDirectory("graft_cow_tmpl")
-        graft.streaming.EventStreams.deleteTreeOnExit(out)
-        val layout = s"$out/table"
-        Tables(spark, dir, "orders")
-          .repartitionByRange(nFiles, col(key)).write.parquet(layout)
-        layout
-      })
-    val out = Files.createTempDirectory(s"graft_cow_$tag")
-    graft.streaming.EventStreams.deleteTreeOnExit(out)
-    val layout = s"$out/table"
-    Files.createDirectories(Paths.get(layout))
-    val s = Files.list(Paths.get(tmpl))
+    val s = Files.list(Paths.get(src))
     try s.forEach { p =>
       if (!Files.isDirectory(p))
-        Files.copy(p, Paths.get(layout, p.getFileName.toString))
+        Files.copy(p, Paths.get(dst, p.getFileName.toString))
     } finally s.close()
-    layout
   }
 
   /** Per-file [min, max] of LONG column `key`, read from the parquet
@@ -226,7 +210,7 @@ object Lakehouse {
     * bit-identical. Updates are exact by the dsum2 argument: price is a
     * raw 2-dp double, +1.0 is the identical IEEE op in both engines. */
   def cowMerge(spark: SparkSession, dir: String): DataFrame = {
-    val layout = writeClustered(spark, dir, "o_orderkey", 8, "merge")
+    val layout = writeClustered(spark, dir)
     val table = spark.read.parquet(layout)
     val mx = table.agg(max(col("o_orderkey"))).head().getLong(0)
     val lo = mx / 2
@@ -304,7 +288,7 @@ object Lakehouse {
     * untouched. Oracle = the surviving table, so a row deleted too many
     * or too few fails the hash. */
   def cowDelete(spark: SparkSession, dir: String): DataFrame = {
-    val layout = writeClustered(spark, dir, "o_orderkey", 8, "delete")
+    val layout = writeClustered(spark, dir)
     val table = spark.read.parquet(layout)
     val mx = table.agg(max(col("o_orderkey"))).head().getLong(0)
     val lo = mx / 10
@@ -354,7 +338,7 @@ object Lakehouse {
   def streamCdcApply(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val base = Tables(spark, dir, "orders")
-    val layout = writeClustered(spark, dir, "o_orderkey", 8, "cdc")
+    val layout = writeClustered(spark, dir)
     // the change stream: updates (existing keys % 7 = 0, new price) and
     // inserts (keys % 11 = 0 re-keyed out of domain), absolute images
     val updates = base.where(col("o_orderkey") % 7 === 0)
@@ -660,46 +644,27 @@ object Lakehouse {
     * (root, max key).
     *
     * 31 lifecycle entries stage this same deterministic fixture before
-    * the operator under test runs; staging it once per (session, sfDir)
-    * and CLONING the layout per query (byte-copied files, manifest paths
-    * rewritten, mtimes preserved) removes ~3 Spark jobs of repeated
+    * the operator under test runs; a [[Memo.fixture]] stages it once and
+    * CLONES the layout per query (byte-copied files, manifest paths
+    * rewritten, mtimes preserved), which removes ~3 Spark jobs of repeated
     * staging per entry while keeping every query's root private and
     * mutable — measured 30%+ of the catalog tier's bench seconds was
-    * re-staging (OPTIMIZATION_r16.md). The memo holds per JVM session;
-    * every bench/verify invocation still computes the fixture from the
-    * parquet inputs. */
-  /** Memo keys carry the INPUT-FILE fingerprint alongside the dir (same
-    * discipline as Tables' schema cache): regenerating the parquet under
-    * `dir` within one JVM misses instead of serving a stale staged store. */
-  private def memoKey(spark: SparkSession, dir: String)
-      : (String, Seq[(String, Long, Long)]) =
-    (dir, graft.Tables.fingerprint(spark, s"$dir/orders.parquet"))
+    * re-staging (OPTIMIZATION_r16.md). Every bench/verify invocation still
+    * computes the fixture from the parquet inputs. */
+  private[graft] def initStore(spark: SparkSession, dir: String): (String, Long) =
+    Memo.fixture("snap_v1", spark, dir, SnapshotStore.cloneRoot) { root =>
+      stageBase(spark, dir, root)
+    }
 
-  private val initStoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[(String, Long, Long)]), (String, Long)]()
-
-  private[graft] def freshRoot(): String = {
-    val out = java.nio.file.Files.createTempDirectory("graft_snap")
-    graft.streaming.EventStreams.deleteTreeOnExit(out)
-    val root = s"$out/table"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    root
-  }
-
-  private[graft] def initStore(spark: SparkSession, dir: String): (String, Long) = {
-    val (src, mx) = initStoreMemo.computeIfAbsent(memoKey(spark, dir), _ => {
-      val root = freshRoot()
-      val base = Tables(spark, dir, "orders")
-        .repartitionByRange(8, col("o_orderkey"))
-      val v1Files = SnapshotStore.writeData(spark, root, base, "base")
-      SnapshotStore.commit(spark, root, v1Files, 0)
-      val m = SnapshotStore.read(spark, root)
-        .agg(max(col("o_orderkey"))).head().getLong(0)
-      (root, m)
-    })
-    val root = freshRoot()
-    SnapshotStore.cloneRoot(spark, src, root)
-    (root, mx)
+  /** Commits orders clustered 8 ways by key as v1 of `root`; returns the
+    * max key. */
+  private def stageBase(spark: SparkSession, dir: String, root: String): Long = {
+    val base = Tables(spark, dir, "orders")
+      .repartitionByRange(8, col("o_orderkey"))
+    val v1Files = SnapshotStore.writeData(spark, root, base, "base")
+    SnapshotStore.commit(spark, root, v1Files, 0)
+    SnapshotStore.read(spark, root)
+      .agg(max(col("o_orderkey"))).head().getLong(0)
   }
 
   /** Zone-admissible files of `fl` for the keys in `keys` — the
@@ -761,30 +726,18 @@ object Lakehouse {
     * q288-model MERGE (update/delete/insert on the [max/2, +max/10]
     * decile); v3 = the q289-model range DELETE ([max/10, +max/20]) — both
     * mutations through [[mutateSnapshot]]'s stage-commit-retry protocol.
-    * Returns (root, mx, prunedA, prunedB). */
-  private val versionedStoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[(String, Long, Long)]), (String, Long, Boolean, Boolean)]()
-
+    * The three-version store is a pure function of the input dir, so it
+    * is a [[Memo.fixture]] like [[initStore]]. Returns (root, mx, prunedA,
+    * prunedB). */
   private[graft] def buildVersionedStore(spark: SparkSession,
       dir: String): (String, Long, Boolean, Boolean) = {
-    // same fixture-clone discipline as [[initStore]]: the three-version
-    // store (v1 base, v2 merge, v3 delete) is a pure function of the
-    // input dir; stage once per session, clone per query
-    val (src, mx, prunedA, prunedB) =
-      versionedStoreMemo.computeIfAbsent(memoKey(spark, dir), _ => {
-        val root = freshRoot()
-        val base = Tables(spark, dir, "orders")
-          .repartitionByRange(8, col("o_orderkey"))
-        val v1Files = SnapshotStore.writeData(spark, root, base, "base")
-        SnapshotStore.commit(spark, root, v1Files, 0)
-        val m = SnapshotStore.read(spark, root)
-          .agg(max(col("o_orderkey"))).head().getLong(0)
+    val (root, (mx, prunedA, prunedB)) =
+      Memo.fixture("snap_v3", spark, dir, SnapshotStore.cloneRoot) { root =>
+        val m = stageBase(spark, dir, root)
         val (_, pA) = mutateSnapshot(spark, root, "m1")(mergeStep(spark, m))
         val (_, pB) = mutateSnapshot(spark, root, "m2")(deleteStep(spark, m))
-        (root, m, pA, pB)
-      })
-    val root = freshRoot()
-    SnapshotStore.cloneRoot(spark, src, root)
+        (m, pA, pB)
+      }
     (root, mx, prunedA, prunedB)
   }
 

@@ -363,7 +363,7 @@ object EventStreams {
         col("a_type"), col("b_type"))
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
     if (Files.exists(p))

@@ -124,4 +124,35 @@ class LoaderSpec extends AnyFunSuite {
     assert(results.head == results.last)
     assert(results.head.nonEmpty)
   }
+
+  test("spread gate: a single-file scan is rebalanced to the cores, a split one is not") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, RepartitionByExpression}
+    val path = s"${TestSpark.sf}/orders.parquet"
+    val df = spark.read.parquet(path)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores == 4)
+    // one file under the default 128m split: one scan task for 4 cores
+    Tables.spreadPath(spark, path, df).queryExecution.logical match {
+      case Repartition(n, true, _) => assert(n == cores)
+      case p => fail(s"spreadPath did not rebalance:\n$p")
+    }
+    Tables.spreadBy(spark, TestSpark.sf, "orders", df, col("o_orderkey"))
+      .queryExecution.logical match {
+      case r: RepartitionByExpression => assert(r.optNumPartitions.contains(cores))
+      case p => fail(s"spreadBy did not rebalance:\n$p")
+    }
+    // a split size of a quarter of the file gives the scan as many tasks
+    // as cores: both return the frame itself
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    val bytes = Files.size(java.nio.file.Paths.get(path))
+    try {
+      spark.conf.set(key, (bytes / cores).toString)
+      assert(Tables.spreadPath(spark, path, df) eq df)
+      assert(Tables.spreadBy(spark, TestSpark.sf, "orders", df, col("o_orderkey")) eq df)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -546,7 +546,7 @@ class PlanSpec extends AnyFunSuite {
     // corpus tokenize happens ONCE at materialization, and the final
     // plan's only documents FILE scan is the bounded langs-distinct —
     // both model branches read the checkpoint RDD
-    graft.queries.Dedup.clearCcCache() // fresh memo: force materialization
+    graft.queries.Memo.clear() // fresh memo: force materialization
     val df = SparkEntry.queries("q185_lang_profile_id")(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
