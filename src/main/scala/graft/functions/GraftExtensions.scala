@@ -10,7 +10,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Registers the engine's native expressions with the session's function
   * registry so they are usable from `expr(...)` / `spark.sql(...)` exactly
   * like built-ins, and participate in whole-stage codegen; also injects the
-  * engine's optimizer rules (`graft.plans.LevenshteinBandRule`).
+  * engine's seven optimizer rules (`graft.plans`: `LevenshteinBandRule`,
+  * `ArrayContainsJoinRule`, `VectorFoldRule`, `MatViewRule`,
+  * `SkippingIndexRule`, `JoinReorderRule`, `BySourceGroupFilterRule`) and
+  * the `AsOfJoinStrategy` planner strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -21,6 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(s => new graft.plans.MatViewRule(s))
     ext.injectOptimizerRule(s => new graft.plans.SkippingIndexRule(s))
     ext.injectOptimizerRule(s => new graft.plans.JoinReorderRule(s))
+    ext.injectOptimizerRule(_ => graft.plans.BySourceGroupFilterRule)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectFunction((
       FunctionIdentifier("dot_d"),

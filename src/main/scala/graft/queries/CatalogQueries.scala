@@ -6,7 +6,7 @@ import graft.sources.SnapshotStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The V2 `TableCatalog` registry entries — the q308/q309/q311/q314/q315
+/** The V2 `TableCatalog` registry entries — the q308/q311/q314/q315
   * family re-expressed as PURE `spark.sql` TEXT against `graft.<t>`:
   * Spark's OWN analyzer resolves the catalog, its OWN group-based rewrite
   * rules plan the copy-on-write MERGE/UPDATE/DELETE, its OWN runtime group
@@ -17,17 +17,19 @@ import org.apache.spark.sql.functions._
   * TWIN DISCIPLINE: each entry is graded by the SAME DuckDB oracle as its
   * snapshot-native counterpart (q308's merge model, q311's delete, q314's
   * update, q315's three-version time travel), so ANY divergence between
-  * the catalog path and the `mutateSnapshot`/`SqlDml` paths — a lost
+  * the catalog path and the DataFrame `mutateSnapshot` path — a lost
   * carry-over row, a half-applied clause, a wrong version resolved — is a
-  * hash mismatch, not a unit-test opinion. The `pruned` flag is computed
-  * from the REAL manifest diff (replaced ⊂ all files), so it grades that
-  * Spark's runtime group filtering actually narrowed the rewrite.
+  * hash mismatch, not a unit-test opinion. q309/q311/q314 ([[SqlDml]])
+  * run `catMerge`/`catDelete`/`catUpdate` themselves under their own
+  * registry names. The `pruned` flag is computed from the REAL manifest
+  * diff (replaced ⊂ all files), so it grades that Spark's runtime group
+  * filtering actually narrowed the rewrite.
   */
 object CatalogQueries {
 
   /** (v1 files, v2 files, pruned) of the last commit under `root`:
     * pruned = the rewrite replaced a strict, non-empty subset. */
-  private def prunedOf(spark: SparkSession, root: String,
+  private[queries] def prunedOf(spark: SparkSession, root: String,
       from: Int, to: Int): Boolean = {
     val a = SnapshotStore.files(spark, root, from).map(Lakehouse.normPath).toSet
     val b = SnapshotStore.files(spark, root, to).map(Lakehouse.normPath).toSet

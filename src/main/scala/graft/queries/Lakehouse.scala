@@ -39,11 +39,12 @@ import org.apache.spark.sql.functions._
   * per table, the documented warehouse contract (SURVEY §7.10); readers
   * between the delete and the append of one commit see a partial table —
   * the same window every manifest-less parquet directory has. The
-  * SNAPSHOT-NATIVE tier below ([[mutateSnapshot]], q308, and the `SqlDml`
-  * front end) closes exactly that window: the same rewrite economics
-  * published through [[graft.sources.SnapshotStore]]'s atomic manifest
-  * commit with OCC retry — q288-q290 remain as the bare-directory
-  * REWRITE-economics demos.
+  * SNAPSHOT-NATIVE tier below ([[mutateSnapshot]], q308; its SQL
+  * counterpart is the `graft.<t>` catalog) closes exactly that window:
+  * the same rewrite economics published through
+  * [[graft.sources.SnapshotStore]]'s atomic manifest commit with OCC
+  * retry — q288-q290 remain as the bare-directory REWRITE-economics
+  * demos.
   */
 object Lakehouse {
 
@@ -576,8 +577,8 @@ object Lakehouse {
   // racing writers conflict and RETRY instead of clobbering
   // (LakehouseSpec), vacuum GCs what no retained version references, and
   // a manifest DIFF yields the change feed without reading unchanged
-  // files. [[mutateSnapshot]] is the composition point: every mutation
-  // below (and the SQL DML front end, `SqlDml`) runs through it.
+  // files. [[mutateSnapshot]] is the composition point: every DataFrame
+  // mutation below runs through it (SQL DML runs through the catalog).
 
   /** SNAPSHOT-NATIVE copy-on-write mutation — the commit protocol every
     * real table format runs its MERGE/DELETE through. `step` derives the

@@ -1,379 +1,27 @@
 package graft.queries
 
-import graft.QueryDef
 import graft.Exact.{dsum2, sqlSum2}
+import graft.QueryDef
+import graft.catalog.GraftCatalog
 import graft.sources.SnapshotStore
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** SQL DML over the snapshot layer — `MERGE INTO` and `DELETE FROM` as
-  * SQL TEXT, lowered onto the same snapshot-native copy-on-write machinery
-  * the DataFrame mutations run through ([[Lakehouse.mutateSnapshot]]:
-  * stage → atomic manifest commit → OCC retry).
+/** The SQL DML registry entries: `MERGE INTO` (incl. `WHEN NOT MATCHED BY
+  * SOURCE`), `DELETE FROM`, `UPDATE` and `VERSION AS OF` reads as SQL text
+  * against `graft.<t>` ([[graft.catalog.GraftCatalog]]). There is one
+  * mutation engine: Spark's own row-level rewrite rules, its runtime group
+  * filter, and the snapshot manifest commit.
   *
-  * The statement is parsed by SPARK'S OWN PARSER
-  * (`sessionState.sqlParser.parsePlan` — full ANSI MERGE grammar, not a
-  * regex), and this module interprets the resulting [[MergeIntoTable]] /
-  * [[DeleteFromTable]] command tree against snapshot tables: the target
-  * name resolves through an explicit name→root map (the statement's
-  * "catalog"), the source through a name→DataFrame map or the session
-  * catalog, and every parsed condition/assignment expression becomes a
-  * `Column` evaluated on aliased DataFrames — so `t.price + 1.0` in the
-  * SQL is exactly the expression the rewrite executes.
-  *
-  * Semantics (the standard MERGE contract):
-  *  - clause order is FIRST-MATCH-WINS: a matched row takes the first
-  *    WHEN MATCHED clause whose condition holds; a source row with no
-  *    target match takes the first WHEN NOT MATCHED clause that holds;
-  *    a TARGET row with no source match takes the first WHEN NOT
-  *    MATCHED BY SOURCE clause that holds (conditions over target
-  *    columns only — there is no source row to reference);
-  *  - a row matched by no applicable clause is carried unchanged;
-  *  - DELETE removes exactly the rows whose predicate is TRUE (NULL
-  *    keeps — the survivor filter is null-safe);
-  *  - the source must match each target row at most once (the Delta/
-  *    Iceberg cardinality contract); a multi-match RAISES an error —
-  *    the same loud failure those engines produce — instead of
-  *    silently duplicating target rows through the join.
-  *  - assigned/inserted values are cast to the target column's type
-  *    (the ANSI store-assignment cast).
-  *
-  * Copy-on-write economics are unchanged from the DataFrame path: affected
-  * files are discovered in one scan (`input_file_name` of matched rows —
-  * |files|-row result), only they are rewritten, inserts append as new
-  * files, and publication is one atomic manifest rename. At 100 TB a SQL
-  * MERGE costs exactly what its DataFrame twin costs.
+  * q309/q311/q314 (MERGE, DELETE, UPDATE) run the functions of their
+  * catalog twins q319-q321 ([[CatalogQueries]]) under the same oracles;
+  * they keep their registry names so the stride-picked benchmark entries
+  * do not shift. q315 reads the store of [[Lakehouse.buildVersionedStore]],
+  * built by DataFrame mutations, so it grades SQL time travel over commits
+  * the catalog did not write (q322 reads commits it did write). q318's
+  * by-source MERGE is pruned by [[graft.plans.BySourceGroupFilterRule]].
   */
 object SqlDml {
-
-  private val Mark = "__graft_matched"
-  private val FileCol = "__graft_file"
-  private val Pick = "__graft_pick"
-
-  private def toCol(e: Expression): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(e)
-
-  /** (relation name, alias) of a parsed target/source table reference. */
-  private def tableRef(p: LogicalPlan): (String, Option[String]) = p match {
-    case SubqueryAlias(ident, UnresolvedRelation(parts, _, _)) =>
-      (parts.mkString("."), Some(ident.name))
-    case UnresolvedRelation(parts, _, _) => (parts.mkString("."), None)
-    case other => throw new IllegalArgumentException(
-      s"SqlDml: unsupported table reference ${other.nodeName}")
-  }
-
-  private def aliased(df: DataFrame, a: Option[String]): DataFrame =
-    a.map(df.as(_)).getOrElse(df)
-
-  /** Execute one SQL DML statement. `targets` maps table names as written
-    * in the SQL to snapshot roots; `sources` maps MERGE USING names to
-    * DataFrames (falling back to the session catalog). Returns
-    * (new snapshot version, pruned). */
-  def execute(spark: SparkSession, sql: String,
-      targets: Map[String, String],
-      sources: Map[String, DataFrame] = Map.empty): (Int, Boolean) = {
-    spark.sessionState.sqlParser.parsePlan(sql) match {
-      case DeleteFromTable(t, cond) =>
-        val (name, alias) = tableRef(t)
-        runDelete(spark, targets(name), alias, toCol(cond))
-      case UpdateTable(t, assigns, cond) =>
-        val (name, alias) = tableRef(t)
-        runUpdate(spark, targets(name), alias, assigns, cond.map(toCol))
-      case m: MergeIntoTable =>
-        val (tName, tAlias) = tableRef(m.targetTable)
-        val (sName, sAlias) = tableRef(m.sourceTable)
-        require(tAlias.isDefined && sAlias.isDefined,
-          "SqlDml: MERGE requires target and source aliases " +
-            "(MERGE INTO t ... USING s ...) so column references are unambiguous")
-        val source = sources.getOrElse(sName, spark.table(sName))
-        runMerge(spark, targets(tName), tAlias, source, sAlias,
-          toCol(m.mergeCondition), m.matchedActions, m.notMatchedActions,
-          m.notMatchedBySourceActions)
-      case other => throw new IllegalArgumentException(
-        s"SqlDml: unsupported statement ${other.nodeName} " +
-          "(MERGE INTO, UPDATE and DELETE FROM are the DML surface)")
-    }
-  }
-
-  /** SQL READ over snapshot tables — plain SELECTs plus `VERSION AS OF`
-    * time travel — by substituting the committed snapshot's scan for
-    * each parsed relation BEFORE analysis: the rest of the statement
-    * (joins, aggregates, windows, the whole SELECT surface) is Spark's
-    * own analyzer/optimizer, untouched. `VERSION AS OF n` resolves
-    * manifest n; a bare reference resolves the latest commit — so a BI
-    * query and its as-of-yesterday audit twin differ by three tokens. */
-  def query(spark: SparkSession, sql: String,
-      targets: Map[String, String]): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.RelationTimeTravel
-    def nameOf(parts: Seq[String]) = parts.mkString(".")
-    val substituted = spark.sessionState.sqlParser.parsePlan(sql).transform {
-      case RelationTimeTravel(UnresolvedRelation(parts, _, _), None, Some(v))
-          if targets.contains(nameOf(parts)) =>
-        SnapshotStore.read(spark, targets(nameOf(parts)), v.toInt)
-          .queryExecution.analyzed
-      case UnresolvedRelation(parts, _, _) if targets.contains(nameOf(parts)) =>
-        SnapshotStore.read(spark, targets(nameOf(parts)))
-          .queryExecution.analyzed
-    }
-    org.apache.spark.sql.graft.ColumnBridge.dataset(spark, substituted)
-  }
-
-  /** DELETE FROM: affected files = those holding at least one TRUE row
-    * (one scan, |files|-row collect); their rewrite keeps the null-safe
-    * complement. */
-  private def runDelete(spark: SparkSession, root: String,
-      alias: Option[String], cond: Column): (Int, Boolean) =
-    Lakehouse.mutateSnapshot(spark, root, "sqldel") { cur =>
-      val t = aliased(spark.read.parquet(cur: _*), alias)
-      val affected = t.where(cond)
-        .select(input_file_name().as("f")).distinct()
-        .collect().map(r => Lakehouse.normPath(r.getString(0))).toSeq
-      if (affected.isEmpty) (Nil, None, None)
-      else {
-        val survivors = aliased(spark.read.parquet(affected: _*), alias)
-          .where(!coalesce(cond, lit(false)))
-        (affected, Some(survivors), None)
-      }
-    }
-
-  /** UPDATE ... SET ... WHERE: affected files as in DELETE; their rewrite
-    * applies the assignments to exactly the rows where the predicate is
-    * TRUE (NULL keeps the row unchanged — store-assignment never fires on
-    * an unknown condition). */
-  private def runUpdate(spark: SparkSession, root: String,
-      alias: Option[String], assigns: Seq[Assignment],
-      cond: Option[Column]): (Int, Boolean) =
-    Lakehouse.mutateSnapshot(spark, root, "sqlupd") { cur =>
-      val t0 = spark.read.parquet(cur: _*)
-      val t = aliased(t0, alias)
-      val condC = cond.getOrElse(lit(true))
-      val affected = t.where(condC)
-        .select(input_file_name().as("f")).distinct()
-        .collect().map(r => Lakehouse.normPath(r.getString(0))).toSeq
-      if (affected.isEmpty) (Nil, None, None)
-      else {
-        val am = assigns.map(a => keyOf(a).toLowerCase ->
-          toCol(a.value)).toMap
-        val unknown = am.keySet.filterNot(k =>
-          t0.schema.exists(_.name.toLowerCase == k))
-        require(unknown.isEmpty, s"SqlDml: UPDATE assigns unknown columns $unknown")
-        val applies = coalesce(condC, lit(false))
-        val a = aliased(spark.read.parquet(affected: _*), alias)
-        def base(n: String): Column =
-          alias.map(q => col(s"$q.$n")).getOrElse(col(n))
-        val repl = a.select(t0.schema.map { f =>
-          am.get(f.name.toLowerCase) match {
-            case Some(v) =>
-              when(applies, v.cast(f.dataType)).otherwise(base(f.name))
-                .as(f.name)
-            case None => base(f.name).as(f.name)
-          }
-        }: _*)
-        (affected, Some(repl), None)
-      }
-    }
-
-  private def condOf(c: Option[Expression]): Column =
-    c.map(toCol).getOrElse(lit(true))
-
-  /** Column name of an assignment's left side (the target column). */
-  private def keyOf(a: Assignment): String = a.key match {
-    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-      u.nameParts.last
-    case other => throw new IllegalArgumentException(
-      s"SqlDml: unsupported assignment key $other")
-  }
-
-  private def runMerge(spark: SparkSession, root: String,
-      tAlias: Option[String], source0: DataFrame, sAlias: Option[String],
-      onCond: Column, matched: Seq[MergeAction],
-      notMatched: Seq[MergeAction],
-      bySource: Seq[MergeAction]): (Int, Boolean) =
-    Lakehouse.mutateSnapshot(spark, root, "sqlmerge") { cur =>
-      val t0 = spark.read.parquet(cur: _*)
-      val targetSchema = t0.schema
-      val targetCols = targetSchema.map(_.name)
-      val s = aliased(source0.withColumn(Mark, lit(1)), sAlias)
-      def tq(c: String): Column = col(s"${tAlias.get}.$c")
-
-      def actionsOf(as_ : Seq[MergeAction])
-          : Seq[(Column, Option[Map[String, Column]])] = as_.map {
-        case UpdateAction(c, assigns, _) =>
-          (condOf(c), Some(assigns.map(a => keyOf(a).toLowerCase ->
-            toCol(a.value)).toMap))
-        case UpdateStarAction(c) => (condOf(c), Some(targetCols.map(n =>
-          n.toLowerCase -> col(s"${sAlias.get}.$n")).toMap))
-        case DeleteAction(c) => (condOf(c), None)
-        case other => throw new IllegalArgumentException(
-          s"SqlDml: unsupported matched action $other")
-      }
-      // WHEN MATCHED and WHEN NOT MATCHED BY SOURCE clauses, each list
-      // first-match-wins within itself; a row is matched XOR by-source,
-      // so guarding by the match marker composes them into one pick
-      val mActs = actionsOf(matched)
-      val sActs = actionsOf(bySource) // conditions may reference TARGET only
-
-      // affected files: any target row with a source match (one semi
-      // join), plus — when by-source clauses exist — any file holding a
-      // row satisfying SOME by-source condition (conservative: the row
-      // may turn out matched, but its file was already a candidate). An
-      // unconditioned by-source clause admits every file, honestly: any
-      // unmatched row anywhere may change.
-      val tf = aliased(t0.withColumn(FileCol, input_file_name()), tAlias)
-      val matchedFiles = tf.join(s, onCond, "left_semi")
-        .select(col(FileCol)).distinct()
-        .collect().map(r => Lakehouse.normPath(r.getString(0))).toSeq
-      val bySourceFiles =
-        if (sActs.isEmpty) Nil
-        else tf.where(sActs.map(_._1).reduce(_ || _))
-          .select(col(FileCol)).distinct()
-          .collect().map(r => Lakehouse.normPath(r.getString(0))).toSeq
-      val affected = (matchedFiles ++ bySourceFiles).distinct
-
-      val replacement = if (affected.isEmpty) None else {
-        // MERGE cardinality contract: each target row may match at most
-        // one source row. Checked on the AFFECTED slice only (every
-        // multi-matched target row lives in an affected file by
-        // definition), so the check costs O(changed slice) like the
-        // rewrite itself. A violation raises, as Delta/Iceberg do,
-        // instead of silently duplicating target rows through the join.
-        val Rid = "__graft_rid"
-        val a = aliased(spark.read.parquet(affected: _*)
-          .withColumn(Rid, monotonically_increasing_id()), tAlias)
-        val multi = a.join(s, onCond, "inner")
-          .groupBy(col(Rid)).agg(count(lit(1)).as("__c"))
-          .where(col("__c") > 1).limit(1).count()
-        require(multi == 0L,
-          "SqlDml: MERGE source matches at least one target row more than " +
-            "once (cardinality violation) - deduplicate the source on the " +
-            "merge keys")
-        val joined = a.drop(Rid).join(s, onCond, "left")
-        // first-match-wins: chained WHEN gives exactly that (a NULL clause
-        // condition falls through, per the MERGE contract)
-        val m = col(Mark).isNotNull
-        val guarded = mActs.map { case (c, am) => (m && c, am) } ++
-          sActs.map { case (c, am) => (!m && c, am) }
-        val pick = guarded.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
-          case (acc, ((c, _), i)) => acc.when(c, lit(i))
-        }.otherwise(lit(-1))
-        val deleteIdx = guarded.zipWithIndex.collect {
-          case ((_, None), i) => i
-        }
-        val kept = joined.withColumn(Pick, pick)
-          .where(if (deleteIdx.isEmpty) lit(true)
-            else !col(Pick).isInCollection(deleteIdx))
-        val outCols = targetSchema.map { f =>
-          val base = tq(f.name)
-          val v = guarded.zipWithIndex.foldLeft(when(lit(false), base)) {
-            case (acc, ((_, Some(am)), i)) =>
-              am.get(f.name.toLowerCase) match {
-                case Some(vc) =>
-                  acc.when(col(Pick) === i, vc.cast(f.dataType))
-                case None => acc
-              }
-            case (acc, ((_, None), _)) => acc
-          }.otherwise(base)
-          v.as(f.name)
-        }
-        Some(kept.select(outCols: _*))
-      }
-
-      // WHEN NOT MATCHED: source rows with no target match, first clause
-      // whose condition holds inserts its projection
-      val iActs: Seq[(Column, Map[String, Column])] = notMatched.map {
-        case InsertAction(c, assigns) =>
-          (condOf(c), assigns.map(a => keyOf(a).toLowerCase ->
-            toCol(a.value)).toMap)
-        case InsertStarAction(c) => (condOf(c), targetCols.map(n =>
-          n.toLowerCase -> col(s"${sAlias.get}.$n")).toMap)
-        case other => throw new IllegalArgumentException(
-          s"SqlDml: unsupported not-matched action $other")
-      }
-      iActs.foreach { case (_, am) =>
-        val missing = targetCols.filterNot(c => am.contains(c.toLowerCase))
-        require(missing.isEmpty,
-          s"SqlDml: INSERT must assign every target column; missing $missing")
-      }
-      val inserts = if (iActs.isEmpty) None else {
-        val unmatched = s.join(aliased(t0, tAlias), onCond, "left_anti")
-        val pickI = iActs.zipWithIndex.foldLeft(when(lit(false), lit(-1))) {
-          case (acc, ((c, _), i)) => acc.when(c, lit(i))
-        }.otherwise(lit(-1))
-        val withPick = unmatched.withColumn(Pick, pickI)
-        val frames = iActs.zipWithIndex.map { case ((_, am), i) =>
-          withPick.where(col(Pick) === i).select(targetSchema.map(f =>
-            am(f.name.toLowerCase).cast(f.dataType).as(f.name)): _*)
-        }
-        Some(frames.reduce(_ unionByName _))
-      }
-      (affected, replacement, inserts)
-    }
-
-  // ---- q309 / q311: the SQL twins of the snapshot-native mutations ---------
-
-  /** q309: SQL `MERGE INTO` — the exact q308 merge written as an ANSI
-    * MERGE statement (three-way: conditional UPDATE with a
-    * target-referencing assignment, conditional DELETE, full-column
-    * INSERT), lowered through [[SqlDml.execute]] onto the same
-    * stage-commit-retry path, and graded by [[Lakehouse.mergeGrade]] —
-    * the q219/q220 twin discipline applied to DML: its CORRECTNESS rows
-    * must equal the DataFrame twin's, so a SQL-front-end divergence is a
-    * hash mismatch, not a unit-test opinion. */
-  def sqlMerge(spark: SparkSession, dir: String): DataFrame = {
-    val (root, mx) = Lakehouse.initStore(spark, dir)
-    val lo = mx / 2; val hi = lo + mx / 10
-    val t1 = SnapshotStore.read(spark, root)
-    val inRange = t1.where(col("o_orderkey").between(lo, hi)).localCheckpoint()
-    val src = inRange.where(col("o_orderkey") % 3 === 0 ||
-        col("o_orderkey") % 3 === 1)
-      .unionByName(inRange.where(col("o_orderkey") % 3 === 2)
-        .select((col("o_orderkey") + lit(100000000L)).as("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
-          col("o_orderdate"), col("o_orderpriority")))
-    val (v2, pruned) = execute(spark,
-      """MERGE INTO snap_orders t USING changes s
-        |ON t.o_orderkey = s.o_orderkey
-        |WHEN MATCHED AND s.o_orderkey % 3 = 0 THEN UPDATE SET
-        |  o_totalprice = t.o_totalprice + 1.0, o_orderpriority = 'MERGED'
-        |WHEN MATCHED AND s.o_orderkey % 3 = 1 THEN DELETE
-        |WHEN NOT MATCHED THEN INSERT
-        |  (o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-        |   o_orderpriority)
-        |  VALUES (s.o_orderkey, s.o_custkey, 'N', s.o_totalprice,
-        |   s.o_orderdate, s.o_orderpriority)""".stripMargin,
-      Map("snap_orders" -> root), Map("changes" -> src))
-    Lakehouse.mergeGrade(spark, dir, root, v2, pruned)
-  }
-
-  /** q311: SQL `DELETE FROM ... WHERE key BETWEEN` — q289's retention
-    * delete as SQL text through the snapshot commit; `time_travel_ok`
-    * pins that v1 still reproduces the pre-delete table (the property the
-    * bare-directory q289 cannot offer), and the oracle re-proves the
-    * surviving content. */
-  def sqlDelete(spark: SparkSession, dir: String): DataFrame = {
-    val (root, mx) = Lakehouse.initStore(spark, dir)
-    val lo = mx / 10; val hi = lo + mx / 20
-    val (v2, pruned) = execute(spark,
-      s"DELETE FROM snap_orders t WHERE t.o_orderkey BETWEEN $lo AND $hi",
-      Map("snap_orders" -> root))
-    def aggOf(df: DataFrame) = df.groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("c"), dsum2(col("o_totalprice")).as("t"))
-    val ttOk = aggOf(SnapshotStore.read(spark, root, 1))
-      .join(aggOf(graft.Tables(spark, dir, "orders"))
-          .withColumnRenamed("c", "c2").withColumnRenamed("t", "t2"),
-        Seq("o_orderstatus"), "full")
-      .where(col("c").isNull || col("c2").isNull ||
-        col("c") =!= col("c2") || col("t") =!= col("t2"))
-      .isEmpty
-    SnapshotStore.read(spark, root, v2)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total_price"))
-      .select(col("o_orderstatus"), col("n"), col("total_price"),
-        lit(pruned).as("pruned"), lit(ttOk).as("time_travel_ok"))
-  }
 
   /** q318: `WHEN NOT MATCHED BY SOURCE` — the MERGE clause family that
     * mutates TARGET rows the source never mentioned (the sync/expiry
@@ -384,26 +32,28 @@ object SqlDml {
     * outcomes are key-predicate-derivable, so the oracle recomputes the
     * whole partition of the table and any row that took the wrong
     * clause — or a matched row that took a by-source clause —
-    * hash-fails. Affected files = matched files ∪ files holding
-    * by-source-condition rows, so the rewrite stays pruned even though
-    * by-source semantics COULD touch anything. */
+    * hash-fails. `pruned` is the manifest diff: the rewrite replaced
+    * matched files ∪ files holding by-source-condition rows, a strict
+    * subset, even though by-source semantics COULD touch anything. */
   def sqlMergeBySource(spark: SparkSession, dir: String): DataFrame = {
     val (root, mx) = Lakehouse.initStore(spark, dir)
+    GraftCatalog.register(spark, "sql_orders_bs", root)
     val lo = mx / 2; val hi = lo + mx / 10
     val cutLow = mx / 20; val cutHigh = mx - mx / 10
-    val src = SnapshotStore.read(spark, root)
+    SnapshotStore.read(spark, root)
       .where(col("o_orderkey").between(lo, hi))
       .select(col("o_orderkey")).localCheckpoint()
-    val (v2, pruned) = execute(spark,
-      s"""MERGE INTO snap_orders t USING changes s
+      .createOrReplaceTempView("sql_changes_bs")
+    spark.sql(
+      s"""MERGE INTO graft.sql_orders_bs t USING sql_changes_bs s
          |ON t.o_orderkey = s.o_orderkey
          |WHEN MATCHED THEN UPDATE SET
          |  o_totalprice = t.o_totalprice + 1.0, o_orderpriority = 'MERGED'
          |WHEN NOT MATCHED BY SOURCE AND t.o_orderkey <= $cutLow
          |  THEN UPDATE SET o_orderpriority = 'STALE'
          |WHEN NOT MATCHED BY SOURCE AND t.o_orderkey > $cutHigh
-         |  THEN DELETE""".stripMargin,
-      Map("snap_orders" -> root), Map("changes" -> src))
+         |  THEN DELETE""".stripMargin)
+    val v2 = SnapshotStore.currentVersion(spark, root)
     SnapshotStore.read(spark, root, v2)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total_price"),
@@ -412,7 +62,8 @@ object SqlDml {
         sum(when(col("o_orderpriority") === "STALE", lit(1L))
           .otherwise(lit(0L))).as("n_stale"))
       .select(col("o_orderstatus"), col("n"), col("total_price"),
-        col("n_merged"), col("n_stale"), lit(pruned).as("pruned"))
+        col("n_merged"), col("n_stale"),
+        lit(CatalogQueries.prunedOf(spark, root, 1, v2)).as("pruned"))
   }
 
   private[graft] val sqlMergeBySourceSql =
@@ -437,39 +88,6 @@ object SqlDml {
        |  CAST(count(*) FILTER (WHERE prio = 'STALE') AS BIGINT) AS n_stale,
        |  TRUE AS pruned
        |FROM fin GROUP BY 1""".stripMargin
-
-  /** q314: SQL `UPDATE ... SET ... WHERE` — the third DML statement on
-    * the same lowered path: predicate-selected rows get store-assignment
-    * updates inside a zone-localized copy-on-write rewrite published by
-    * an atomic manifest commit. The assignment references the target
-    * (`t.o_totalprice + 1.0`), so expression interpretation — not just
-    * constant replacement — is under the oracle. */
-  def sqlUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val (root, mx) = Lakehouse.initStore(spark, dir)
-    val lo = mx / 3; val hi = lo + mx / 20
-    val (v2, pruned) = execute(spark,
-      s"""UPDATE snap_orders t
-         |SET o_totalprice = t.o_totalprice + 1.0, o_orderpriority = 'UPD'
-         |WHERE t.o_orderkey BETWEEN $lo AND $hi""".stripMargin,
-      Map("snap_orders" -> root))
-    def aggOf(df: DataFrame) = df.groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("c"), dsum2(col("o_totalprice")).as("t"))
-    val ttOk = aggOf(SnapshotStore.read(spark, root, 1))
-      .join(aggOf(graft.Tables(spark, dir, "orders"))
-          .withColumnRenamed("c", "c2").withColumnRenamed("t", "t2"),
-        Seq("o_orderstatus"), "full")
-      .where(col("c").isNull || col("c2").isNull ||
-        col("c") =!= col("c2") || col("t") =!= col("t2"))
-      .isEmpty
-    SnapshotStore.read(spark, root, v2)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total_price"),
-        sum(when(col("o_orderpriority") === "UPD", lit(1L))
-          .otherwise(lit(0L))).as("n_upd"))
-      .select(col("o_orderstatus"), col("n"), col("total_price"),
-        col("n_upd"), lit(pruned).as("pruned"),
-        lit(ttOk).as("time_travel_ok"))
-  }
 
   private[graft] val sqlUpdateSql =
     s"""WITH rng AS (
@@ -498,21 +116,22 @@ object SqlDml {
        |GROUP BY 1""".stripMargin
 
   /** q315: SQL TIME TRAVEL — q301's three-version read as SQL text:
-    * `SELECT ... FROM snap VERSION AS OF v` per version, UNION ALL'd.
+    * `SELECT ... FROM graft.<t> VERSION AS OF v` per version, UNION ALL'd.
     * The versions were produced by REAL snapshot-native mutations
     * (merge then delete); the oracle recomputes each version's content
     * from the change model, so a time-travel read that leaked a later
     * version's rows — or resolved the wrong manifest — hash-fails. */
   def sqlTimeTravel(spark: SparkSession, dir: String): DataFrame = {
     val (root, _, _, _) = Lakehouse.buildVersionedStore(spark, dir)
-    val sql = (1 to 3).map { v =>
+    GraftCatalog.register(spark, "sql_orders_tt", root)
+    spark.sql((1 to 3).map { v =>
       s"""SELECT CAST($v AS BIGINT) AS version, o_orderstatus,
          |  CAST(count(*) AS BIGINT) AS n,
          |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
          |    AS total_price
-         |FROM snap VERSION AS OF $v GROUP BY o_orderstatus""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    query(spark, sql, Map("snap" -> root))
+         |FROM graft.sql_orders_tt VERSION AS OF $v
+         |GROUP BY o_orderstatus""".stripMargin
+    }.mkString("\nUNION ALL\n"))
   }
 
   private[graft] val sqlTimeTravelSql = Lakehouse.stagesSql(
@@ -529,9 +148,10 @@ object SqlDml {
        |  FROM v3 GROUP BY 2) s""".stripMargin)
 
   def defs: Seq[QueryDef] = Seq(
-    QueryDef("q309_sql_merge", sqlMerge, Some(Lakehouse.snapMergeSql)),
-    QueryDef("q311_sql_delete", sqlDelete, Some(sqlDeleteSql)),
-    QueryDef("q314_sql_update", sqlUpdate, Some(sqlUpdateSql)),
+    QueryDef("q309_sql_merge", CatalogQueries.catMerge,
+      Some(Lakehouse.snapMergeSql)),
+    QueryDef("q311_sql_delete", CatalogQueries.catDelete, Some(sqlDeleteSql)),
+    QueryDef("q314_sql_update", CatalogQueries.catUpdate, Some(sqlUpdateSql)),
     QueryDef("q315_sql_time_travel", sqlTimeTravel, Some(sqlTimeTravelSql)),
     QueryDef("q318_sql_merge_bysource", sqlMergeBySource,
       Some(sqlMergeBySourceSql)))

@@ -774,6 +774,7 @@ object Temporal {
       val part = Files.list(tmp).iterator().asScala
         .find(_.getFileName.toString.endsWith(".parquet")).get
       Files.copy(part, inDir.resolve(f"cdc-$i%02d.parquet"))
+      graft.streaming.EventStreams.deleteTree(tmp)
     }
     val streamSpark = spark.newSession()
     streamSpark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -792,13 +793,8 @@ object Temporal {
       }
       .start()
     try q.awaitTermination() finally {
-      def rm(p: java.nio.file.Path): Unit = {
-        import scala.jdk.CollectionConverters._
-        if (Files.isDirectory(p))
-          Files.list(p).iterator().asScala.toSeq.foreach(rm)
-        Files.deleteIfExists(p)
-      }
-      rm(inDir); rm(ck)
+      graft.streaming.EventStreams.deleteTree(inDir)
+      graft.streaming.EventStreams.deleteTree(ck)
     }
     val deltaLog = spark.read.parquet(s"$outDir/batch_*")
     val gen1 = Warehouse.materializeBucketed(spark,

@@ -132,6 +132,143 @@ class CatalogSpec extends AnyFunSuite {
       e.getMessage.contains("multiple rows"))
   }
 
+  /** A committed snapshot table (k BIGINT, v STRING, p DOUBLE), keys 1..6
+    * with v NULL at k = 5, two files, registered as graft.<name>. Returns
+    * its root. */
+  private def nullTable(name: String): String = {
+    val out = java.nio.file.Files.createTempDirectory("catspec_null")
+    val root = s"$out/t"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+    val base = (1L to 6L).map(k => (k, if (k == 5) null else s"v$k", k * 1.0))
+      .toDF("k", "v", "p").repartitionByRange(2, col("k"))
+    SnapshotStore.commit(spark, root,
+      SnapshotStore.writeData(spark, root, base, "base"), 0)
+    GraftCatalog.register(spark, name, root)
+    root
+  }
+
+  private def rowsOf(name: String): Map[Long, (Option[String], Double)] =
+    spark.table(s"graft.$name").collect().map(r =>
+      r.getLong(0) -> ((Option(r.getString(1)), r.getDouble(2)))).toMap
+
+  test("MERGE clause order is first-match-wins") {
+    freshTable("t_first")
+    Seq((2L, "up", 20.0), (4L, "del", 0.0), (99L, "up", 0.5))
+      .toDF("k", "op", "np").createOrReplaceTempView("first_src")
+    spark.sql(
+      """MERGE INTO graft.t_first t USING first_src s ON t.k = s.k
+        |WHEN MATCHED AND s.op = 'del' THEN DELETE
+        |WHEN MATCHED AND s.op = 'up' THEN UPDATE SET p = t.p + s.np, v = 'U'
+        |WHEN MATCHED THEN UPDATE SET v = 'NEVER'
+        |""".stripMargin)
+    val t = rowsOf("t_first")
+    assert(!t.contains(4L))
+    assert(t(2L) == ((Some("U"), 22.0))) // second clause won, third never ran
+    assert(t(99L) == ((Some("U"), 99.5)))
+    assert(t.values.forall(_._1 != Some("NEVER")))
+    assert(t.size == 99)
+  }
+
+  test("MERGE INSERT * maps source columns by name with the store-assignment cast") {
+    freshTable("t_star")
+    // source columns in another order; k and p arrive as INT
+    Seq(("v7", 7, 107), ("x", 0, 2)).toDF("v", "p", "k")
+      .createOrReplaceTempView("star_src")
+    spark.sql(
+      """MERGE INTO graft.t_star t USING star_src s ON t.k = s.k
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val t = spark.table("graft.t_star")
+    assert(t.schema("k").dataType.typeName == "long")
+    assert(t.schema("p").dataType.typeName == "double")
+    assert(t.count() == 101)
+    assert(rowsOf("t_star")(107L) == ((Some("v7"), 7.0)))
+    // matched row 2 had no matched clause: carried unchanged
+    assert(rowsOf("t_star")(2L) == ((Some("v2"), 2.0)))
+  }
+
+  test("DELETE is null-safe: a row whose predicate is NULL survives") {
+    nullTable("t_nulldel")
+    // v = 'v2' is TRUE for row 2 only and NULL for row 5
+    spark.sql("DELETE FROM graft.t_nulldel WHERE v = 'v2'")
+    assert(rowsOf("t_nulldel").keySet == Set(1L, 3L, 4L, 5L, 6L))
+  }
+
+  test("UPDATE carries a row whose predicate is NULL; unknown columns raise") {
+    nullTable("t_nullupd")
+    spark.sql("UPDATE graft.t_nullupd SET p = p * 2, v = 'U' WHERE v = 'v2'")
+    val t = rowsOf("t_nullupd")
+    assert(t(2L) == ((Some("U"), 4.0)))
+    assert(t(5L) == ((None, 5.0)))
+    assert(t(1L) == ((Some("v1"), 1.0)))
+    assert(t.size == 6)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("UPDATE graft.t_nullupd SET nope = 1 WHERE k = 1")
+    }
+  }
+
+  test("DELETE matching nothing commits a new version that keeps every file") {
+    val root = nullTable("t_noop")
+    spark.sql("DELETE FROM graft.t_noop WHERE k = 12345")
+    assert(SnapshotStore.currentVersion(spark, root) == 2)
+    assert(spark.table("graft.t_noop").count() == 6)
+    val v1 = SnapshotStore.files(spark, root, 1).toSet
+    val added = SnapshotStore.files(spark, root, 2).toSet -- v1
+    assert(v1.subsetOf(SnapshotStore.files(spark, root, 2).toSet))
+    // the empty rewrite may still land as a zero-row file
+    assert(added.forall(f => spark.read.parquet(f).isEmpty))
+  }
+
+  test("MERGE NOT MATCHED BY SOURCE: matched rows never take a by-source clause") {
+    nullTable("t_bysrc")
+    Seq((2L, 20.0), (4L, 40.0)).toDF("k", "np").createOrReplaceTempView("bysrc_src")
+    spark.sql(
+      """MERGE INTO graft.t_bysrc t USING bysrc_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET v = 'HIT'
+        |WHEN NOT MATCHED BY SOURCE AND t.k >= 6 THEN DELETE
+        |WHEN NOT MATCHED BY SOURCE AND t.k <= 2 THEN UPDATE SET v = 'ORPHAN'
+        |""".stripMargin)
+    assert(rowsOf("t_bysrc").map { case (k, (v, _)) => k -> v } == Map(
+      1L -> Some("ORPHAN"), // unmatched, k <= 2
+      2L -> Some("HIT"), // matched: the k <= 2 by-source clause must not fire
+      3L -> Some("v3"), // unmatched, no clause applies: carried
+      4L -> Some("HIT"),
+      5L -> None)) // k = 6 deleted; 5 carried with its NULL v
+  }
+
+  test("by-source MERGE replaces only matched files and files holding by-source rows") {
+    val root = freshTable("t_bsprune")
+    val before = SnapshotStore.files(spark, root)
+    assert(before.size == 4)
+    def keysOf(f: String) =
+      spark.read.parquet(f).select(col("k")).collect().map(_.getLong(0)).toSet
+    // the matched key 10 and the by-source keys (<= 2, > 95)
+    val touched = before.filter(f => keysOf(f).exists(k => k == 10 || k <= 2 || k > 95))
+    assert(touched.size == 2)
+    Seq(10L).toDF("k").createOrReplaceTempView("bsprune_src")
+    spark.sql(
+      """MERGE INTO graft.t_bsprune t USING bsprune_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET v = 'HIT'
+        |WHEN NOT MATCHED BY SOURCE AND t.k > 95 THEN DELETE
+        |WHEN NOT MATCHED BY SOURCE AND t.k <= 2 THEN UPDATE SET v = 'OLD'
+        |""".stripMargin)
+    val after = SnapshotStore.files(spark, root).toSet
+    assert(before.toSet -- after == touched.toSet)
+    val t = rowsOf("t_bsprune")
+    assert(t.size == 95 && t(10L)._1.contains("HIT") && t(1L)._1.contains("OLD"))
+    assert(t(50L)._1.contains("v50"))
+
+    // an unconditioned by-source clause may change any row: all 4 replaced
+    val root2 = freshTable("t_bsall")
+    val before2 = SnapshotStore.files(spark, root2).toSet
+    spark.sql(
+      """MERGE INTO graft.t_bsall t USING bsprune_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET v = 'HIT'
+        |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 'OLD'
+        |""".stripMargin)
+    assert((before2 intersect SnapshotStore.files(spark, root2).toSet).isEmpty)
+    assert(rowsOf("t_bsall").values.count(_._1.contains("OLD")) == 99)
+  }
+
   test("OCC: a commit landing between load and publish fails the statement, table stays consistent") {
     val root = freshTable("t_occ")
     // load the table at v1 by planning a DELETE lazily... instead simulate:

@@ -40,6 +40,15 @@ class SessionsSpec extends AnyFunSuite {
     assert(Runner.select(SparkEntry.queries, None).size == SparkEntry.queries.size)
   }
 
+  test("the registry holds 364 entries and SqlDml keeps its five names") {
+    // `queries` is a Map: a duplicate or dropped name collapses silently
+    // and would shift the every-30th-name pick of perfbench's registry_mix
+    assert(SparkEntry.queries.size == 364)
+    assert(graft.queries.SqlDml.defs.map(_.name) == Seq("q309_sql_merge",
+      "q311_sql_delete", "q314_sql_update", "q315_sql_time_travel",
+      "q318_sql_merge_bysource"))
+  }
+
   test("Runner.select rejects unknown names, an empty list and duplicate short keys") {
     val unknown = intercept[IllegalArgumentException](
       Runner.select(registry, Some("q1_a,q9_nope")))

@@ -2,20 +2,21 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL DML semantics on closed-form snapshot tables — the MERGE/DELETE
-  * edge cases the registry oracle can't isolate: first-match-wins clause
-  * order, null-safe DELETE survivors, store-assignment casts, INSERT *,
-  * and the no-match no-op. */
+/** SQL MERGE atomicity on a closed-form snapshot table: a source that
+  * matches one target row twice must raise (the Delta/Iceberg contract)
+  * and leave the table exactly as it was — no version committed, no row
+  * duplicated. The catalog suite pins that the error is raised; this
+  * one pins that nothing reaches the manifest. */
 class SqlDmlSpec extends AnyFunSuite {
   import TestSpark.spark
   import org.apache.spark.sql.functions._
   import spark.implicits._
-  import graft.queries.SqlDml
+  import graft.catalog.GraftCatalog
   import graft.sources.SnapshotStore
 
   /** A committed snapshot table (k BIGINT, v STRING, p DOUBLE), keys 1..6,
-    * two files. Returns its root. */
-  private def freshStore(): String = {
+    * two files, registered as graft.<name>. Returns its root. */
+  private def freshStore(name: String): String = {
     val out = java.nio.file.Files.createTempDirectory("sqldmlspec")
     val root = s"$out/t"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
@@ -23,137 +24,27 @@ class SqlDmlSpec extends AnyFunSuite {
       .toDF("k", "v", "p").repartitionByRange(2, col("k"))
     SnapshotStore.commit(spark, root,
       SnapshotStore.writeData(spark, root, base, "base"), 0)
+    GraftCatalog.register(spark, name, root)
     root
   }
 
-  test("MERGE: conditional update, delete, insert; clause order is first-match-wins") {
-    val root = freshStore()
-    val src = Seq((2L, "up", 20.0), (4L, "del", 0.0), (99L, "new", 99.5))
-      .toDF("k", "op", "np")
-    val (v, pruned) = SqlDml.execute(spark,
-      """MERGE INTO tbl t USING src s ON t.k = s.k
-        |WHEN MATCHED AND s.op = 'del' THEN DELETE
-        |WHEN MATCHED AND s.op = 'up' THEN UPDATE SET p = t.p + s.np, v = 'U'
-        |WHEN MATCHED THEN UPDATE SET v = 'NEVER'
-        |WHEN NOT MATCHED THEN INSERT (k, v, p) VALUES (s.k, s.op, s.np)
-        |""".stripMargin,
-      Map("tbl" -> root), Map("src" -> src))
-    assert(v == 2)
-    val t = SnapshotStore.read(spark, root)
-      .collect().map(r => r.getLong(0) ->
-        ((Option(r.getString(1)), r.getDouble(2)))).toMap
-    assert(!t.contains(4L)) // deleted
-    assert(t(2L) == ((Some("U"), 22.0))) // second clause won, third never ran
-    assert(t(99L) == ((Some("new"), 99.5))) // inserted
-    assert(t(1L) == ((Some("v1"), 1.0))) // unmatched carried unchanged
-    assert(t(5L) == ((None, 5.0))) // null v carried unchanged
-    assert(t.size == 6)
-    // time travel: v1 is intact
-    assert(SnapshotStore.read(spark, root, 1).count() == 6)
-    assert(pruned || true) // pruning depends on layout; no crash contract
-  }
-
   test("MERGE raises on cardinality violation: a source matching one target row twice") {
-    val root = freshStore()
+    val root = freshStore("sqldml_card")
     // key 2 appears TWICE in the source — the Delta/Iceberg contract says
     // this must raise, not silently duplicate the target row
-    val src = Seq((2L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "op", "np")
-    val e = intercept[IllegalArgumentException] {
-      SqlDml.execute(spark,
-        """MERGE INTO tbl t USING src s ON t.k = s.k
-          |WHEN MATCHED THEN UPDATE SET v = s.op""".stripMargin,
-        Map("tbl" -> root), Map("src" -> src))
+    Seq((2L, "a", 1.0), (2L, "b", 2.0)).toDF("k", "op", "np")
+      .createOrReplaceTempView("sqldml_dup_src")
+    val e = intercept[Throwable] {
+      spark.sql(
+        """MERGE INTO graft.sqldml_card t USING sqldml_dup_src s ON t.k = s.k
+          |WHEN MATCHED THEN UPDATE SET v = s.op""".stripMargin)
     }
-    assert(e.getMessage.contains("cardinality"))
+    assert(e.getMessage.toUpperCase.contains("CARDINALITY") ||
+      e.getMessage.contains("multiple rows"))
     // nothing was committed: the table is still at v1 with 6 rows
     assert(SnapshotStore.currentVersion(spark, root) == 1)
     assert(SnapshotStore.read(spark, root).count() == 6)
-  }
-
-  test("MERGE INSERT * maps source columns by name; values cast to target types") {
-    val root = freshStore()
-    // source schema matches target by NAME; p arrives as INT (cast needed)
-    val src = Seq((7, "v7", 7), (2, "x", 0)).toDF("k", "v", "p")
-      .select(col("k").cast("int").as("k"), col("v"),
-        col("p").cast("int").as("p"))
-    SqlDml.execute(spark,
-      """MERGE INTO tbl t USING src s ON t.k = s.k
-        |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
-      Map("tbl" -> root), Map("src" -> src))
-    val t = SnapshotStore.read(spark, root)
-    assert(t.count() == 7)
-    assert(t.schema("k").dataType.typeName == "long") // cast applied
-    assert(t.where(col("k") === 7L).select(col("p")).head().getDouble(0) == 7.0)
-    // matched row 2 had no matched clause: carried unchanged
-    assert(t.where(col("k") === 2L).select(col("v")).head().getString(0) == "v2")
-  }
-
-  test("DELETE is null-safe: rows where the predicate is NULL survive") {
-    val root = freshStore()
-    // v = 'v2' deletes exactly row 2; row 5 (v NULL) must survive even
-    // though `v = 'v2'` is NULL there, and `v <> 'v2'` is NULL too
-    val (v, _) = SqlDml.execute(spark,
-      "DELETE FROM tbl t WHERE t.v = 'v2'", Map("tbl" -> root))
-    assert(v == 2)
-    val keys = SnapshotStore.read(spark, root)
-      .select(col("k")).collect().map(_.getLong(0)).toSet
-    assert(keys == Set(1L, 3L, 4L, 5L, 6L))
-  }
-
-  test("DELETE matching nothing commits a no-op version; unsupported statements refuse loudly") {
-    val root = freshStore()
-    val (v, pruned) = SqlDml.execute(spark,
-      "DELETE FROM tbl t WHERE t.k = 12345", Map("tbl" -> root))
-    assert(v == 2 && !pruned)
-    assert(SnapshotStore.read(spark, root).count() == 6)
-    assert(SnapshotStore.files(spark, root, 1).toSet ==
-      SnapshotStore.files(spark, root, 2).toSet)
-    intercept[IllegalArgumentException] {
-      SqlDml.execute(spark, "INSERT INTO tbl VALUES (7, 'x', 7.0)",
-        Map("tbl" -> root))
-    }
-  }
-
-  test("MERGE NOT MATCHED BY SOURCE mutates only unmatched target rows; matched rows never take by-source clauses") {
-    val root = freshStore() // keys 1..6, v NULL at 5
-    val src = Seq((2L, 20.0), (4L, 40.0)).toDF("k", "np")
-    val (v, _) = SqlDml.execute(spark,
-      """MERGE INTO tbl t USING src s ON t.k = s.k
-        |WHEN MATCHED THEN UPDATE SET v = 'HIT'
-        |WHEN NOT MATCHED BY SOURCE AND t.k >= 6 THEN DELETE
-        |WHEN NOT MATCHED BY SOURCE AND t.k <= 2 THEN UPDATE SET v = 'ORPHAN'
-        |""".stripMargin,
-      Map("tbl" -> root), Map("src" -> src))
-    assert(v == 2)
-    val t = SnapshotStore.read(spark, root)
-      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    assert(t == Map(
-      1L -> Some("ORPHAN"), // unmatched, k<=2
-      2L -> Some("HIT"), // matched: by-source k<=2 clause must NOT fire
-      3L -> Some("v3"), // unmatched, no clause applies: carried
-      4L -> Some("HIT"),
-      5L -> None)) // k=6 deleted; 5 carried with its NULL v
-  }
-
-  test("UPDATE applies assignments only where the predicate is TRUE; NULL-predicate rows carried") {
-    val root = freshStore()
-    // v = 'v2' is TRUE for row 2, FALSE for most, NULL for row 5 — only
-    // row 2 may change; the assignment reads the target (p = p * 2)
-    val (v, _) = SqlDml.execute(spark,
-      "UPDATE tbl t SET p = t.p * 2, v = 'U' WHERE t.v = 'v2'",
-      Map("tbl" -> root))
-    assert(v == 2)
-    val t = SnapshotStore.read(spark, root)
-      .collect().map(r => r.getLong(0) ->
-        ((Option(r.getString(1)), r.getDouble(2)))).toMap
-    assert(t(2L) == ((Some("U"), 4.0)))
-    assert(t(5L) == ((None, 5.0))) // NULL predicate: untouched
-    assert(t(1L) == ((Some("v1"), 1.0)))
-    assert(t.size == 6)
-    // unknown assigned column refuses loudly
-    intercept[IllegalArgumentException] {
-      SqlDml.execute(spark, "UPDATE tbl t SET nope = 1 WHERE t.k = 1",
-        Map("tbl" -> root))
-    }
+    assert(spark.table("graft.sqldml_card").where(col("k") === 2L)
+      .select(col("v")).head().getString(0) == "v2")
   }
 }
