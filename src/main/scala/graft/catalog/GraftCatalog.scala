@@ -15,11 +15,10 @@ import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, LogicalWriteInfo, LogicalWriteInfoImpl, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetWrite
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
@@ -45,7 +44,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (subquery)` filter against [[SnapshotScan]] (the Iceberg/Delta
   *    group-filtering contract), and the replacement is published through
   *    ONE atomic manifest commit with first-writer-wins OCC
-  *    ([[SnapshotBatchWrite.commit]]). MERGE cardinality violations raise
+  *    ([[SnapshotFanoutBatchWrite.commit]]). MERGE cardinality violations raise
   *    through Spark's own `MergeRows` check;
   *  - `INSERT INTO graft.t` appends new files plus a manifest commit —
   *    never touching existing data files.
@@ -2026,13 +2025,13 @@ class SnapshotWriteBuilder(spark: SparkSession, table: SnapshotTable,
     new SnapshotWrite(spark, table, info, op, truncateAll)
 }
 
-/** The physical write is Spark's OWN parquet V2 write (codegen'd writers,
-  * task-commit protocol) aimed at an invisible staging directory inside
-  * the root; [[SnapshotBatchWrite.commit]] then publishes: staged files
-  * rename into the root (same-FS metadata ops), and ONE manifest commit
-  * replaces exactly the operation's scanned files — based on the version
-  * the table was LOADED at, so a concurrent committer conflicts
-  * (first-writer-wins OCC) instead of interleaving. */
+/** The physical write is [[SnapshotFanoutWriterFactory]] — the catalog's
+  * one executor-side writer — aimed at an invisible staging directory
+  * inside the root; [[SnapshotFanoutBatchWrite.commit]] then publishes:
+  * committed tasks' staged files rename into the root (same-FS metadata
+  * ops), and ONE manifest commit replaces exactly the operation's scanned
+  * files — based on the version the table was LOADED at, so a concurrent
+  * committer conflicts (first-writer-wins OCC) instead of interleaving. */
 class SnapshotWrite(spark: SparkSession, table: SnapshotTable,
     info: LogicalWriteInfo, op: Option[SnapshotRowLevelOperation],
     truncateAll: Boolean = false)
@@ -2042,10 +2041,11 @@ class SnapshotWrite(spark: SparkSession, table: SnapshotTable,
   override def description(): String =
     s"graft-snapshot-write(${table.name()}, v${table.snapVersion})"
 
-  /** The manifest's partition spec bound against the write schema —
-    * partitioned tables route through the fanout writer below. None when
-    * the spec is absent, unparsable, or references columns the write
-    * doesn't carry (the write then lands unannotated — conservative). */
+  /** The manifest's partition spec bound against the write schema — the
+    * tuple the fanout writer below routes rows by. None when the spec is
+    * absent, unparsable, or references columns the write doesn't carry
+    * (the write then uses the empty tuple and lands unannotated —
+    * conservative). */
   private val boundPart: Option[Seq[BoundPartItem]] =
     SnapshotStore.partitionSpecOf(spark, table.root, table.snapVersion)
       .flatMap(PartitionSpec.parse)
@@ -2079,33 +2079,15 @@ class SnapshotWrite(spark: SparkSession, table: SnapshotTable,
   override def toBatch: BatchWrite = {
     val run = java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(table.root,
-      s"_graft_stage_cat_$run")
-    boundPart match {
-      case Some(bp) =>
-        // PARTITION-FANOUT write: one parquet file per (task, partition
-        // tuple) through Spark's own OutputWriter; the tuple rides the
-        // commit message, so the manifest annotates every new file with
-        // its partition tuple — catalog writes KEEP partition pruning
-        // power, no post-hoc scan of the data just written.
-        val job = org.apache.hadoop.mapreduce.Job.getInstance(
-          spark.sessionState.newHadoopConf())
-        val owf = new ParquetFileFormat().prepareWrite(spark, job,
-          Map.empty[String, String], info.schema())
-        new SnapshotFanoutBatchWrite(spark, table, staging.toString, run,
-          new SnapshotFanoutWriterFactory(staging.toString, info.schema(),
-            bp, owf,
-            new SerializableConfiguration(job.getConfiguration)),
-          op, truncateAll)
-      case None =>
-        val winfo = LogicalWriteInfoImpl(info.queryId(), info.schema(),
-          CaseInsensitiveStringMap.empty(),
-          java.util.Optional.empty[StructType](),
-          java.util.Optional.empty[StructType]())
-        val delegate = ParquetWrite(Seq(staging.toString), "parquet",
-          (_: DataType) => true, winfo).toBatch
-        new SnapshotBatchWrite(spark, table, staging.toString, run, delegate,
-          op, truncateAll)
-    }
+      s"_graft_stage_cat_$run").toString
+    // one file per (task, partition tuple); an unpartitioned table is the
+    // empty tuple. The tuple rides the commit message, so the manifest
+    // annotates every new file of a partitioned table with its tuple —
+    // catalog writes KEEP partition pruning power, no post-hoc scan of
+    // the data just written.
+    new SnapshotFanoutBatchWrite(spark, table, staging, run,
+      SnapshotFanout.factory(spark, staging, info.schema(),
+        boundPart.getOrElse(Nil)), op, truncateAll)
   }
 
   /** `writeStream.toTable("graft.t")`: every micro-batch epoch becomes ONE
@@ -2114,8 +2096,8 @@ class SnapshotWrite(spark: SparkSession, table: SnapshotTable,
     * replayed epoch — Structured Streaming redelivers after a
     * commit-then-crash — finds its mark already stamped and skips:
     * exactly-once from at-least-once, the manifest edition of q324's
-    * version arithmetic. The physical write is Spark's own parquet
-    * OutputWriter per task. */
+    * version arithmetic. The physical write is the catalog's fanout
+    * writer, one staging directory per epoch. */
   override def toStreaming: StreamingWrite = {
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConf())
@@ -2126,80 +2108,18 @@ class SnapshotWrite(spark: SparkSession, table: SnapshotTable,
   }
 }
 
-class SnapshotBatchWrite(spark: SparkSession, table: SnapshotTable,
-    staging: String, run: String, delegate: BatchWrite,
-    op: Option[SnapshotRowLevelOperation],
-    truncateAll: Boolean = false) extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo) =
-    delegate.createBatchWriterFactory(info)
-
-  override def useCommitCoordinator(): Boolean =
-    delegate.useCommitCoordinator()
-
-  private def fs = new org.apache.hadoop.fs.Path(table.root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    delegate.commit(messages) // staged task files land under `staging`
-    val f = fs
-    val stagingP = new org.apache.hadoop.fs.Path(staging)
-    val rootP = new org.apache.hadoop.fs.Path(table.root)
-    val moved =
-      if (!f.exists(stagingP)) Nil
-      else f.listStatus(stagingP).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-        .sortBy(_.getName).zipWithIndex.map { case (p, i) =>
-          val dst = new org.apache.hadoop.fs.Path(rootP, s"cat_${run}_$i.parquet")
-          require(f.rename(p, dst), s"catalog stage publish failed: $p -> $dst")
-          dst.toString
-        }.toList
-    f.delete(stagingP, true)
-    val replaced = op.map(_.replacedFiles).getOrElse(Nil)
-      .map(SnapshotStore.uriPath).toSet
-    if (op.isEmpty && !truncateAll) {
-      // PURE APPEND: rebase onto the CURRENT tip with OCC retry — new
-      // files commute with any interleaved commit (the snapshot-isolation
-      // append contract every table format gives), and a write-audit-
-      // publish staging INSERT (table loaded at a pinned `main`, tip
-      // already past it) lands on the branch instead of conflicting.
-      SnapshotTable.appendCommit(spark, table.root, table.snapVersion,
-        moved, moved)
-    } else {
-      // carry every non-replaced manifest line VERBATIM (partition
-      // annotations, the spec meta line) — only the replaced data lines
-      // go; new files land unannotated (pruning power narrows, rows
-      // never). A truncating overwrite keeps ONLY the meta lines: schema
-      // and spec survive, every data line and vector goes. Strict OCC on
-      // the loaded version: a rewrite must never silently rebase.
-      val kept =
-        if (truncateAll) SnapshotStore.metaLines(spark, table.root,
-          table.snapVersion)
-        else SnapshotStore.linesReplacing(spark, table.root,
-          table.snapVersion, replaced)
-      SnapshotStore.commitOrCleanup(spark, table.root, kept ++ moved,
-        table.snapVersion, moved)
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    try delegate.abort(messages)
-    finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-}
-
-/** One committed task file of a streaming epoch (staged, not yet visible). */
-case class EpochStagedFile(path: String) extends WriterCommitMessage
-
 /** One staged fanout file and the partition value all its rows share. */
 case class PartStagedFile(path: String, value: String)
   extends WriterCommitMessage
 
-/** Batch write for PARTITIONED snapshot tables: tasks fan rows out into
-  * one file per partition value ([[SnapshotFanoutWriterFactory]]), and the
-  * commit publishes every file WITH its value annotation — the manifest's
-  * per-file partition tuple stays complete through catalog INSERT /
-  * OVERWRITE / row-level rewrites, so partition pruning never loses power
-  * to catalog writes. Same OCC/carry semantics as [[SnapshotBatchWrite]]. */
+/** The catalog's batch write: tasks fan rows out into one file per
+  * partition tuple ([[SnapshotFanoutWriterFactory]]; the empty tuple on an
+  * unpartitioned table), and the commit publishes every committed task's
+  * files through [[SnapshotFanout.publish]] — `part=`-annotated on a
+  * partitioned table, so the manifest's per-file partition tuple stays
+  * complete through catalog INSERT / OVERWRITE / row-level rewrites. An
+  * aborted task attempt's files never reach a commit message; the whole
+  * staging directory goes once the commit has published. */
 class SnapshotFanoutBatchWrite(spark: SparkSession, table: SnapshotTable,
     staging: String, run: String, factory: SnapshotFanoutWriterFactory,
     op: Option[SnapshotRowLevelOperation], truncateAll: Boolean)
@@ -2213,32 +2133,35 @@ class SnapshotFanoutBatchWrite(spark: SparkSession, table: SnapshotTable,
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val f = fs
-    val staged = messages.collect { case c: CompositePartStaged => c.files }
-      .flatten.sortBy(_.path)
-    val moved = staged.zipWithIndex.map { case (p, i) =>
-      val dst = new org.apache.hadoop.fs.Path(table.root,
-        s"cat_${run}_$i.parquet")
-      require(f.rename(new org.apache.hadoop.fs.Path(p.path), dst),
-        s"fanout stage publish failed: ${p.path} -> $dst")
-      (dst.toString, p.value)
-    }.toSeq
-    f.delete(new org.apache.hadoop.fs.Path(staging), true)
-    val replaced = op.map(_.replacedFiles).getOrElse(Nil)
-      .map(SnapshotStore.uriPath).toSet
-    val partLines = moved.map { case (p, v) => SnapshotStore.partLine(p, v) }
+    val (lines, moved) =
+      try SnapshotFanout.publish(spark, table.root, messages.toSeq,
+        factory.bound, s"cat_$run")
+      finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     if (op.isEmpty && !truncateAll) {
-      // pure append: rebase onto the tip (see SnapshotBatchWrite.commit)
+      // PURE APPEND: rebase onto the CURRENT tip with OCC retry — new
+      // files commute with any interleaved commit (the snapshot-isolation
+      // append contract every table format gives), and a write-audit-
+      // publish staging INSERT (table loaded at a pinned `main`, tip
+      // already past it) lands on the branch instead of conflicting.
       SnapshotTable.appendCommit(spark, table.root, table.snapVersion,
-        partLines, moved.map(_._1))
+        lines, moved)
     } else {
+      // carry every non-replaced manifest line VERBATIM (partition
+      // annotations, the spec meta line) — only the replaced data lines
+      // go. A truncating overwrite keeps ONLY the meta lines: schema and
+      // spec survive, every data line and vector goes. A rewrite that
+      // leaves no data line keeps the write schema in the manifest. Strict
+      // OCC on the loaded version: a rewrite must never silently rebase.
+      val replaced = op.map(_.replacedFiles).getOrElse(Nil)
+        .map(SnapshotStore.uriPath).toSet
       val kept =
         if (truncateAll) SnapshotStore.metaLines(spark, table.root,
           table.snapVersion)
         else SnapshotStore.linesReplacing(spark, table.root,
           table.snapVersion, replaced)
-      SnapshotStore.commitOrCleanup(spark, table.root, kept ++ partLines,
-        table.snapVersion, moved.map(_._1))
+      SnapshotStore.commitOrCleanup(spark, table.root,
+        SnapshotStore.linesKeepingSchema(kept ++ lines, factory.schema),
+        table.snapVersion, moved)
     }
   }
 
@@ -2246,13 +2169,16 @@ class SnapshotFanoutBatchWrite(spark: SparkSession, table: SnapshotTable,
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
 }
 
-/** Executor-side fanout: rows route to one Spark parquet OutputWriter per
-  * partition TUPLE (opened lazily; the requested clustered distribution
-  * keeps the per-task tuple count small). Tuples are rendered by the
-  * exact [[PartitionSpec]] functions the read-side pruning compares
-  * with. */
-class SnapshotFanoutWriterFactory(staging: String, schema: StructType,
-    bound: Seq[BoundPartItem],
+/** The catalog's one executor-side writer ([[SnapshotFanout]]): rows
+  * route to one Spark parquet OutputWriter per partition TUPLE — the
+  * empty tuple when `bound` is empty — opened when the tuple's first row
+  * arrives (the requested clustered distribution keeps the per-task tuple
+  * count small; an empty task opens none). Tuples are rendered by the
+  * exact [[PartitionSpec]] functions the read-side pruning compares with.
+  * File names carry the task ATTEMPT id, so a retried attempt never
+  * shares a path with the attempt it replaces. */
+class SnapshotFanoutWriterFactory(staging: String, val schema: StructType,
+    val bound: Seq[BoundPartItem],
     owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     conf: SerializableConfiguration)
   extends org.apache.spark.sql.connector.write.DataWriterFactory {
@@ -2265,6 +2191,7 @@ class SnapshotFanoutWriterFactory(staging: String, schema: StructType,
       private val writers = scala.collection.mutable.LinkedHashMap
         .empty[String, (org.apache.spark.sql.execution.datasources.OutputWriter, String)]
       private var nFiles = 0
+      private var nRows = 0L
 
       private def writerFor(value: String) = writers.getOrElseUpdate(value, {
         val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
@@ -2280,11 +2207,19 @@ class SnapshotFanoutWriterFactory(staging: String, schema: StructType,
         (owf.newInstance(path, schema, ctx), path)
       })
 
-      override def write(row: InternalRow): Unit =
-        writerFor(BoundPartItem.valueOf(bound, row))._1.write(row)
+      override def write(row: InternalRow): Unit = {
+        writerFor(if (bound.isEmpty) ""
+          else BoundPartItem.valueOf(bound, row))._1.write(row)
+        nRows += 1
+      }
 
       override def commit(): WriterCommitMessage = {
         writers.values.foreach(_._1.close())
+        org.apache.spark.graft.OutputMetricsBridge.add(
+          writers.values.map { case (_, p) =>
+            val path = new org.apache.hadoop.fs.Path(p)
+            path.getFileSystem(conf.value).getFileStatus(path).getLen
+          }.sum, nRows)
         // one message per file is the natural shape, but the contract is
         // one per task — pack (path, value) pairs into a composite
         CompositePartStaged(writers.map { case (v, (_, p)) =>
@@ -2574,25 +2509,18 @@ class SnapshotDeltaBatchWrite(spark: SparkSession, table: SnapshotTable,
     * statement whole, never interleaves. A no-match operation (nothing
     * staged) commits nothing — the table version only moves on change. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val f = fs
     val staged = messages.collect { case d: DeltaStagedFiles => d }
     val data = staged.flatMap(_.dataFiles).sorted
     val dvPairs = staged.flatMap(d => d.dvFiles.map((_, d.dvCovers)))
       .sortBy(_._1)
-    def publish(paths: Seq[String], tag: String): Seq[String] =
-      paths.zipWithIndex.map { case (p, i) =>
-        val dst = new org.apache.hadoop.fs.Path(table.root,
-          s"${tag}_${run}_$i.parquet")
-        require(f.rename(new org.apache.hadoop.fs.Path(p), dst),
-          s"delta stage publish failed: $p -> $dst")
-        dst.toString
-      }
     try {
       if (data.nonEmpty || dvPairs.nonEmpty) {
-        val dataMoved = publish(data, "mor")
+        val dataMoved = SnapshotStore.publish(spark, table.root, data,
+          s"mor_$run")
         // `dvb_` names mark the bitmap payload generation — readers
         // dispatch per FILE, so legacy per-position vectors coexist
-        val dvMoved = publish(dvPairs.map(_._1), "dvb")
+        val dvMoved = SnapshotStore.publish(spark, table.root,
+          dvPairs.map(_._1), s"dvb_$run")
         // dv lines carry their COVERAGE: later loads resolve pointers
         // from the manifest alone (no vector-file read, no job)
         val dvLines = dvMoved.zip(dvPairs.map(_._2)).map {
@@ -2614,7 +2542,7 @@ class SnapshotDeltaBatchWrite(spark: SparkSession, table: SnapshotTable,
           validate = SnapshotTable.vectorCommitValidate(spark, table.root,
             table.snapVersion, covers))
       }
-    } finally f.delete(new org.apache.hadoop.fs.Path(staging), true)
+    } finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -2712,22 +2640,29 @@ class SnapshotDeltaWriterFactory(staging: String, dataSchema: StructType,
 }
 
 /** The streaming half of the catalog write: tasks stage parquet through
-  * Spark's own OutputWriter into `<root>/_graft_stage_stream_<q>/ep<n>/`,
-  * and `commit(epoch)` publishes them as ONE manifest commit stamped with
-  * the epoch high-water mark (`meta:epoch=<queryId>:<n>`):
+  * the catalog's fanout writer (empty tuple) into
+  * `<root>/_graft_stage_stream_<q>/ep<n>/`, and `commit(epoch)` publishes
+  * them as ONE manifest commit stamped with the epoch high-water mark
+  * (`meta:epoch=<queryId>:<n>`):
   *
   *  - EXACTLY-ONCE: a replayed epoch (at-least-once redelivery) finds its
   *    id ≤ the stamped mark and discards its staging — the commit is
   *    idempotent by manifest arithmetic, no sink-side dedup;
   *  - READER ISOLATION: a mid-stream reader resolves the latest manifest —
   *    always a whole number of epochs, never a torn one;
-  *  - CONCURRENCY: the commit OCC-retries against interleaving committers
-  *    (a compaction, a batch INSERT) by re-deriving the carry lines; the
-  *    staged epoch files move at most once.
+  *  - CONCURRENCY: the commit is a pure append through
+  *    [[SnapshotTable.appendCommit]] — it rebases onto interleaving
+  *    committers (a compaction, a batch INSERT) with OCC retry, and
+  *    declines LOUDLY when the schema or partition spec moved since the
+  *    stream loaded the table (its files were written under the loaded
+  *    column names) or when another run already stamped this epoch. The
+  *    staged epoch files move at most once; an abandoned commit deletes
+  *    them.
   *
   * At 100 TB the per-epoch cost is the staged bytes + one rename — the
   * manifest grows by |epoch files| lines, and q304-style compaction folds
-  * small epoch files back into clustered ones. */
+  * small epoch files back into clustered ones. Streaming into a
+  * partitioned table writes unannotated files (kept by every prune). */
 class SnapshotStreamingWrite(table: SnapshotTable, schema: StructType,
     queryId: String, owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     conf: SerializableConfiguration) extends StreamingWrite {
@@ -2740,97 +2675,54 @@ class SnapshotStreamingWrite(table: SnapshotTable, schema: StructType,
       : StreamingDataWriterFactory =
     new SnapshotStreamWriterFactory(stagingBase, schema, owf, conf)
 
-  private def fs(spark: SparkSession) = new org.apache.hadoop.fs.Path(table.root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def dropStaging(spark: SparkSession, epochId: Long): Unit = {
+    val epDir = new org.apache.hadoop.fs.Path(stagingBase, s"ep$epochId")
+    epDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(epDir, true)
+  }
+
+  private def stamped(spark: SparkSession, epochId: Long,
+      version: Int = -1): Boolean =
+    SnapshotStore.epochOf(spark, table.root, queryId, version)
+      .exists(_ >= epochId)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val f = fs(spark)
-    val epDir = new org.apache.hadoop.fs.Path(stagingBase, s"ep$epochId")
-    val staged = messages.collect { case EpochStagedFile(p) => p }.sorted
-    def dropStaging(): Unit = f.delete(epDir, true)
-    if (staged.isEmpty) { dropStaging(); return } // empty epoch: no version
-    if (SnapshotStore.epochOf(spark, table.root, queryId)
-        .exists(_ >= epochId)) { dropStaging(); return } // replayed epoch
-    // publish the staged files (invisible until the manifest lands). The
-    // names carry a per-ATTEMPT unique component: a crash between these
-    // renames and the manifest commit leaves the epoch unmarked, so the
-    // replay re-publishes — deterministic names would then rename onto
-    // existing targets (wedging rename-strict filesystems); unique names
-    // make the replay clean, and the crashed attempt's files stay
-    // unreferenced like any abandoned staging.
-    val att = java.util.UUID.randomUUID().toString.take(8)
-    val moved = staged.zipWithIndex.map { case (p, i) =>
-      val dst = new org.apache.hadoop.fs.Path(table.root,
-        s"strm_${tag}_ep${epochId}_${att}_$i.parquet")
-      require(f.rename(new org.apache.hadoop.fs.Path(p), dst),
-        s"stream stage publish failed: $p -> $dst")
-      dst.toString
-    }.toSeq
-    dropStaging()
-    def dropMoved(): Unit =
-      moved.foreach(p => f.delete(new org.apache.hadoop.fs.Path(p), false))
-    var attempt = 0
-    while (attempt < 5) {
-      val cur = SnapshotStore.currentVersion(spark, table.root)
-      if (SnapshotStore.epochOf(spark, table.root, queryId)
-          .exists(_ >= epochId)) { // a replay raced us past this epoch
-        dropMoved()
-        return
-      }
-      val kept = SnapshotStore.linesReplacing(spark, table.root, cur, Set.empty)
-      try {
-        SnapshotStore.commit(spark, table.root,
-          SnapshotStore.linesWithEpoch(kept ++ moved, queryId, epochId), cur)
-        return
-      } catch {
-        case _: SnapshotStore.CommitConflictException => attempt += 1
-      }
-    }
-    dropMoved() // give up clean: nothing references these files
-    throw new SnapshotStore.CommitConflictException(
-      s"stream epoch $epochId: lost 5 consecutive commit races under " +
-        table.root)
+    try {
+      if (stamped(spark, epochId)) return // replayed epoch: a no-op
+      // the names carry a per-ATTEMPT unique component: a crash between
+      // the renames and the manifest commit leaves the epoch unmarked, so
+      // the replay re-publishes — deterministic names would then rename
+      // onto existing targets (wedging rename-strict filesystems); unique
+      // names make the replay clean, and the crashed attempt's files stay
+      // unreferenced like any abandoned staging
+      val att = java.util.UUID.randomUUID().toString.take(8)
+      val (lines, moved) = SnapshotFanout.publish(spark, table.root,
+        messages.toSeq, Nil, s"strm_${tag}_ep${epochId}_$att")
+      // an empty epoch commits no version
+      if (moved.nonEmpty)
+        SnapshotTable.appendCommit(spark, table.root, table.snapVersion,
+          lines, moved, validate = cur => !stamped(spark, epochId, cur),
+          keptTransform = SnapshotStore.linesWithEpoch(_, queryId, epochId))
+    } finally dropStaging(spark, epochId)
   }
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    fs(SparkSession.active).delete(
-      new org.apache.hadoop.fs.Path(stagingBase, s"ep$epochId"), true)
+    dropStaging(SparkSession.active, epochId)
 }
 
-/** Executor-side epoch writer: Spark's own parquet OutputWriter aimed at
-  * the epoch's staging directory; task retries write distinct attempt
-  * files and only committed tasks' files reach the manifest. */
+/** Executor-side epoch writer: the catalog's fanout writer (empty tuple)
+  * aimed at the epoch's staging directory; task retries write distinct
+  * attempt files and only committed tasks' files reach the manifest. */
 class SnapshotStreamWriterFactory(stagingBase: String, schema: StructType,
     owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     conf: SerializableConfiguration) extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID("graftstream", (epochId % Int.MaxValue).toInt),
-        TaskType.MAP, partitionId), 0)
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf.value, attempt)
-    val dir = new org.apache.hadoop.fs.Path(stagingBase, s"ep$epochId")
-    val f = dir.getFileSystem(conf.value)
-    f.mkdirs(dir)
-    val path = new org.apache.hadoop.fs.Path(dir,
-      f"part-$partitionId%05d-$taskId${owf.getFileExtension(ctx)}").toString
-    val w = owf.newInstance(path, schema, ctx)
-    new DataWriter[InternalRow] {
-      override def write(r: InternalRow): Unit = w.write(r)
-      override def commit(): WriterCommitMessage = {
-        w.close(); EpochStagedFile(path)
-      }
-      override def abort(): Unit = {
-        w.close()
-        f.delete(new org.apache.hadoop.fs.Path(path), false)
-      }
-      override def close(): Unit = ()
-    }
-  }
+      epochId: Long): DataWriter[InternalRow] =
+    new SnapshotFanoutWriterFactory(
+      new org.apache.hadoop.fs.Path(stagingBase, s"ep$epochId").toString,
+      schema, Nil, owf, conf).createWriter(partitionId, taskId)
 }

@@ -334,23 +334,18 @@ class GraftProcedure(catalogName: String, procName: String)
         // the SCOPED data lines and the vectors they fully reconcile are
         // replaced by the clustered rewrite — out-of-scope data lines and
         // their vectors carry byte-identical (untouched partitions keep
-        // their files). On a partitioned table the rewrite fans out per
-        // partition TUPLE (the catalog write's own machinery) so the new
-        // files KEEP their per-file annotations (pruning power survives
-        // OPTIMIZE); an unparseable/unbindable spec writes unannotated —
-        // conservative: such files are kept unconditionally by pruning. A
-        // losing OCC committer deletes its freshly published files
+        // their files). The rewrite runs through the catalog's one fanout
+        // writer: on a partitioned table the new files KEEP their
+        // per-file tuple annotations (pruning power survives OPTIMIZE);
+        // an unpartitioned, unparseable or unbindable spec writes the
+        // empty tuple, unannotated — conservative: such files are kept
+        // unconditionally by pruning. A compaction of zero live rows
+        // publishes no file (and stamps the schema if nothing else holds
+        // it). A losing OCC committer deletes its freshly published files
         // (commitOrCleanup) instead of leaking them forever past vacuum's
         // manifest-referenced reach.
-        val (newLines, newFiles) = bound match {
-          case Some(bp) =>
-            val pairs = SnapshotFanout.write(spark, root, clustered, bp, "opt")
-            (pairs.map { case (p, v) => SnapshotStore.partLine(p, v) },
-              pairs.map(_._1))
-          case None =>
-            val fl = SnapshotStore.writeData(spark, root, clustered, "opt")
-            (fl, fl)
-        }
+        val (newLines, newFiles) = SnapshotFanout.write(spark, root,
+          clustered, bound.getOrElse(Nil), "opt")
         // a FULL-scope compact also reconciles equality deletes: every
         // rewritten file's epoch now postdates every eq sequence, so the
         // key tombstones address nothing — drop their lines. A scoped
@@ -365,7 +360,8 @@ class GraftProcedure(catalogName: String, procName: String)
         // cur+1 — stamp it dataChange=false: a compaction moves bytes,
         // never rows, and a change feed must emit nothing for it
         val v = SnapshotStore.commitOrCleanup(spark, root,
-          kept ++ newLines :+ SnapshotStore.maintenanceLine(cur + 1),
+          SnapshotStore.linesKeepingSchema(kept ++ newLines,
+            clustered.schema) :+ SnapshotStore.maintenanceLine(cur + 1),
           cur, newFiles)
         InternalRow(v, before.length,
           before.length - scoped.length + newFiles.length, dvsDropped.size)

@@ -25,8 +25,9 @@ object GraftUpsert {
 
   /** Upsert `df` into the snapshot table at `root`, keyed by `keys`
     * (matched rows are REPLACED whole, unmatched insert; callers dedupe
-    * within a batch). Insert files route through the partition fanout
-    * when the table has a spec, keeping pruning/SPJ power.
+    * within a batch). Insert files go through the catalog's fanout
+    * writer, tuple-annotated when the table has a spec (pruning/SPJ power
+    * kept).
     *
     * `queryId`/`epochId` make it exactly-once under streaming replay:
     * the commit stamps the epoch high-water mark and a redelivered epoch
@@ -77,15 +78,7 @@ object GraftUpsert {
       .flatMap(items => BoundPartItem.bind(items, df.schema))
     val (dataLines, dataFiles) =
       if (!insertRows) (Nil, Nil)
-      else bound match {
-        case Some(bp) =>
-          val pairs = SnapshotFanout.write(spark, root, df, bp, "ups")
-          (pairs.map { case (pp, v) => SnapshotStore.partLine(pp, v) },
-            pairs.map(_._1))
-        case None =>
-          val fl = SnapshotStore.writeData(spark, root, df, "ups")
-          (fl, fl)
-      }
+      else SnapshotFanout.write(spark, root, df, bound.getOrElse(Nil), "ups")
     import org.apache.spark.sql.functions.col
     val eqFiles = SnapshotStore.writeData(spark, root,
       df.select(keys.map(col): _*).distinct().coalesce(1), "eqk")

@@ -146,20 +146,6 @@ object Lakehouse {
           .agg(min(col(key)).as("lo"), max(col(key)).as("hi"))
     }
 
-  /** The files whose [min,max] key interval covers at least one key of
-    * `keys` — the zone-map admissibility test run as one broadcast join.
-    * Conservative: covering-but-not-containing files are returned too
-    * (an extra rewrite, never a lost row). */
-  private def affectedFilesOf(spark: SparkSession, layout: String,
-      key: String, keys: DataFrame): Seq[String] = {
-    val zones = zonesOf(spark,
-      listDataFiles(spark, layout).map(_.getPath.toString), key)
-    keys.toDF("k").join(broadcast(zones),
-        col("k") >= col("lo") && col("k") <= col("hi"))
-      .select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSeq // |files|-bounded
-  }
-
   private def normName(s: String): String =
     new org.apache.hadoop.fs.Path(s).getName
 
@@ -167,6 +153,18 @@ object Lakehouse {
     * paths — normalize both to the URI path for set comparisons. */
   private[graft] def normPath(s: String): String =
     new org.apache.hadoop.fs.Path(s).toUri.getPath
+
+  /** Run a rewrite `step` — the same (affected files, replacement, extra
+    * rows) derivation the snapshot tier commits through [[mutateSnapshot]]
+    * — over the bare directory's listed files, and apply it with
+    * [[commitRewrite]]. Returns (pruned, historyUntouched). */
+  private def rewriteLayout(spark: SparkSession, layout: String)(
+      step: Seq[String] => (Seq[String], Option[DataFrame], Option[DataFrame]))
+      : (Boolean, Boolean) = {
+    val (affected, replacement, extra) =
+      step(listDataFiles(spark, layout).map(_.getPath.toString))
+    commitRewrite(spark, layout, affected, replacement, extra)
+  }
 
   /** Apply a copy-on-write rewrite: replace `affected` files with
     * `newContent` (staged off the table first), append `extra` rows as
@@ -197,6 +195,14 @@ object Lakehouse {
     (pruned, untouched)
   }
 
+  /** The largest `o_orderkey` of the bare directory `layout`: from the
+    * footer zone map when every file carries stats (no Spark job), else
+    * one aggregate scan. */
+  private def maxKey(spark: SparkSession, layout: String): Long =
+    footerZones(spark, listDataFiles(spark, layout).map(_.getPath.toString),
+      "o_orderkey").flatMap(_.map(_._3).maxOption).getOrElse(
+      spark.read.parquet(layout).agg(max(col("o_orderkey"))).head().getLong(0))
+
   // ---- q288: MERGE INTO, copy-on-write, stats-pruned -----------------------
 
   /** q288: MERGE — the full three-way contract over the orders table:
@@ -212,36 +218,8 @@ object Lakehouse {
     * raw 2-dp double, +1.0 is the identical IEEE op in both engines. */
   def cowMerge(spark: SparkSession, dir: String): DataFrame = {
     val layout = writeClustered(spark, dir)
-    val table = spark.read.parquet(layout)
-    val mx = table.agg(max(col("o_orderkey"))).head().getLong(0)
-    val lo = mx / 2
-    val hi = lo + mx / 10
-    val inRange = table.where(col("o_orderkey").between(lo, hi))
-      .localCheckpoint() // feeds keys, updates, inserts — one scan
-    val updKeys = inRange.where(col("o_orderkey") % 3 === 0)
-      .select(col("o_orderkey"))
-    val delKeys = inRange.where(col("o_orderkey") % 3 === 1)
-      .select(col("o_orderkey"))
-    val inserts = inRange.where(col("o_orderkey") % 3 === 2)
-      .select((col("o_orderkey") + lit(100000000L)).as("o_orderkey"),
-        col("o_custkey"), lit("N").as("o_orderstatus"), col("o_totalprice"),
-        col("o_orderdate"), col("o_orderpriority"))
-    val matched = updKeys.union(delKeys)
-    val affected = affectedFilesOf(spark, layout, "o_orderkey", matched)
-    val content = spark.read.parquet(affected: _*)
-    val merged = content
-      .join(updKeys.withColumnRenamed("o_orderkey", "uk"),
-        col("o_orderkey") === col("uk"), "left")
-      .join(delKeys.withColumnRenamed("o_orderkey", "dk"),
-        col("o_orderkey") === col("dk"), "left_anti")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        when(col("uk").isNotNull, col("o_totalprice") + lit(1.0))
-          .otherwise(col("o_totalprice")).as("o_totalprice"),
-        col("o_orderdate"),
-        when(col("uk").isNotNull, lit("MERGED"))
-          .otherwise(col("o_orderpriority")).as("o_orderpriority"))
     val (pruned, untouched) =
-      commitRewrite(spark, layout, affected, Some(merged), Some(inserts))
+      rewriteLayout(spark, layout)(mergeStep(spark, maxKey(spark, layout)))
     spark.read.parquet(layout)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total_price"),
@@ -290,17 +268,8 @@ object Lakehouse {
     * or too few fails the hash. */
   def cowDelete(spark: SparkSession, dir: String): DataFrame = {
     val layout = writeClustered(spark, dir)
-    val table = spark.read.parquet(layout)
-    val mx = table.agg(max(col("o_orderkey"))).head().getLong(0)
-    val lo = mx / 10
-    val hi = lo + mx / 20
-    val matched = table.where(col("o_orderkey").between(lo, hi))
-      .select(col("o_orderkey"))
-    val affected = affectedFilesOf(spark, layout, "o_orderkey", matched)
-    val survivors = spark.read.parquet(affected: _*)
-      .where(!col("o_orderkey").between(lo, hi))
     val (pruned, untouched) =
-      commitRewrite(spark, layout, affected, Some(survivors), None)
+      rewriteLayout(spark, layout)(deleteStep(spark, maxKey(spark, layout)))
     spark.read.parquet(layout)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total_price"))
@@ -337,11 +306,30 @@ object Lakehouse {
     * re-delivery that double-applied would still hash-match only if the
     * final state is right. */
   def streamCdcApply(spark: SparkSession, dir: String): DataFrame = {
+    val layout = writeClustered(spark, dir)
+    val (batches, _) = cdcStream(spark, dir, "graft_cdc") { (batch, _) =>
+      applyImages(spark, layout, batch)
+    }
+    val threeBatches = batches == 3
+    spark.read.parquet(layout)
+      .groupBy(col("o_orderstatus"))
+      .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total_price"),
+        sum(when(col("o_orderpriority") === "CDC", lit(1L))
+          .otherwise(lit(0L))).as("n_cdc"))
+      .select(col("o_orderstatus"), col("n"), col("total_price"),
+        col("n_cdc"), lit(threeBatches).as("three_batches"))
+  }
+
+  /** The q290/q324 change stream over `dir`'s orders: ABSOLUTE row images
+    * — updates (existing keys % 7 = 0, new price) and inserts (keys % 11
+    * = 0 re-keyed out of domain) — staged as three change files under a
+    * `<prefix>_in` temp dir and delivered one file per micro-batch
+    * (`maxFilesPerTrigger=1`, AvailableNow) to `onBatch(batch, batchId)`.
+    * Returns (micro-batches run, the change-file dir). */
+  private def cdcStream(spark: SparkSession, dir: String, prefix: String)(
+      onBatch: (DataFrame, Long) => Unit): (Int, String) = {
     import org.apache.spark.sql.streaming.Trigger
     val base = Tables(spark, dir, "orders")
-    val layout = writeClustered(spark, dir)
-    // the change stream: updates (existing keys % 7 = 0, new price) and
-    // inserts (keys % 11 = 0 re-keyed out of domain), absolute images
     val updates = base.where(col("o_orderkey") % 7 === 0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         ((col("o_orderkey") % 1000).cast("double") + lit(0.5))
@@ -352,13 +340,13 @@ object Lakehouse {
         col("o_custkey"), lit("N").as("o_orderstatus"), col("o_totalprice"),
         col("o_orderdate"), col("o_orderpriority"))
     val changes = updates.unionByName(inserts).localCheckpoint()
-    val inDir = java.nio.file.Files.createTempDirectory("graft_cdc_in")
+    val inDir = java.nio.file.Files.createTempDirectory(s"${prefix}_in")
     graft.streaming.EventStreams.deleteTreeOnExit(inDir)
     (0 until 3).foreach { b =>
       changes.where(pmod(col("o_orderkey"), lit(3)) === b)
         .coalesce(1).write.parquet(s"$inDir/c$b")
     }
-    val ck = java.nio.file.Files.createTempDirectory("graft_cdc_ck")
+    val ck = java.nio.file.Files.createTempDirectory(s"${prefix}_ck")
     graft.streaming.EventStreams.deleteTreeOnExit(ck)
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = spark.readStream
@@ -368,47 +356,44 @@ object Lakehouse {
       .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", ck.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batches.incrementAndGet()
-        applyImages(spark, layout, batch)
+        onBatch(batch, batchId)
       }
       .start()
     q.awaitTermination()
-    val threeBatches = batches.get() == 3
-    spark.read.parquet(layout)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total_price"),
-        sum(when(col("o_orderpriority") === "CDC", lit(1L))
-          .otherwise(lit(0L))).as("n_cdc"))
-      .select(col("o_orderstatus"), col("n"), col("total_price"),
-        col("n_cdc"), lit(threeBatches).as("three_batches"))
+    (batches.get(), inDir.toString)
   }
 
-  /** MERGE one batch of absolute row images into the clustered layout:
-    * rows in affected files are replaced-or-kept (anti-join + union —
-    * exact upsert even when a zone covers a key the file doesn't hold),
-    * images no file's range covers are appended as new files. */
-  private[graft] def applyImages(spark: SparkSession, layout: String,
-      batch: DataFrame): Unit = {
+  /** The upsert of one batch of absolute row images, derived from a file
+    * list (shared by q290's directory and q324's snapshot): rows in
+    * affected files are replaced-or-kept (anti-join + union — exact
+    * upsert even when a zone covers a key the file doesn't hold); images
+    * no file's range covers come back as the extra rows. */
+  private def imagesStep(spark: SparkSession, batch: DataFrame)(
+      cur: Seq[String]): (Seq[String], Option[DataFrame], Option[DataFrame]) = {
     val images = batch.localCheckpoint() // one materialization per batch
     val keys = images.select(col("o_orderkey"))
-    val affected = affectedFilesOf(spark, layout, "o_orderkey", keys)
-    val zones = zonesOf(spark,
-      listDataFiles(spark, layout).map(_.getPath.toString), "o_orderkey")
-    val covered = images.join(broadcast(zones),
-        col("o_orderkey") >= col("lo") && col("o_orderkey") <= col("hi"),
-        "left_semi")
-    val uncovered = images.join(broadcast(zones),
-        col("o_orderkey") >= col("lo") && col("o_orderkey") <= col("hi"),
-        "left_anti")
+    val affected = affectedOfList(spark, cur, keys)
+    val zones = broadcast(zonesOf(spark, cur, "o_orderkey"))
+    val inZone = col("o_orderkey") >= col("lo") && col("o_orderkey") <= col("hi")
+    val covered = images.join(zones, inZone, "left_semi")
+    val uncovered = images.join(zones, inZone, "left_anti")
     val merged =
       if (affected.isEmpty) None
       else Some(spark.read.parquet(affected: _*)
         .join(keys.withColumnRenamed("o_orderkey", "k"),
           col("o_orderkey") === col("k"), "left_anti")
         .unionByName(covered))
-    commitRewrite(spark, layout, affected, merged, Some(uncovered))
+    (affected, merged, Some(uncovered))
   }
+
+  /** MERGE one batch of absolute row images into the clustered layout:
+    * [[imagesStep]] over the directory, uncovered images appended as new
+    * files. */
+  private[graft] def applyImages(spark: SparkSession, layout: String,
+      batch: DataFrame): Unit =
+    rewriteLayout(spark, layout)(imagesStep(spark, batch))
 
   private val streamCdcApplySql =
     s"""WITH fin AS (
@@ -454,48 +439,18 @@ object Lakehouse {
     * one manifest listing. This is the Delta/Iceberg `txnVersion`
     * idempotent-writer contract expressed through the engine's own layer. */
   def streamCdcSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val (root, _) = initStore(spark, dir)
-    val base = Tables(spark, dir, "orders")
-    val updates = base.where(col("o_orderkey") % 7 === 0)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        ((col("o_orderkey") % 1000).cast("double") + lit(0.5))
-          .as("o_totalprice"),
-        col("o_orderdate"), lit("CDC").as("o_orderpriority"))
-    val inserts = base.where(col("o_orderkey") % 11 === 0)
-      .select((col("o_orderkey") + lit(200000000L)).as("o_orderkey"),
-        col("o_custkey"), lit("N").as("o_orderstatus"), col("o_totalprice"),
-        col("o_orderdate"), col("o_orderpriority"))
-    val changes = updates.unionByName(inserts).localCheckpoint()
-    val inDir = java.nio.file.Files.createTempDirectory("graft_cdcsnap_in")
-    graft.streaming.EventStreams.deleteTreeOnExit(inDir)
-    (0 until 3).foreach { b =>
-      changes.where(pmod(col("o_orderkey"), lit(3)) === b)
-        .coalesce(1).write.parquet(s"$inDir/c$b")
-    }
-    val ck = java.nio.file.Files.createTempDirectory("graft_cdcsnap_ck")
-    graft.streaming.EventStreams.deleteTreeOnExit(ck)
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val consistent = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val q = spark.readStream
-      .schema(changes.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$inDir/c*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ck.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batches.incrementAndGet()
+    val (batches, inDir) = cdcStream(spark, dir, "graft_cdcsnap") {
+      (batch, batchId) =>
         // the mid-stream reader contract: before batch b applies, the
         // chain stands at exactly v(b+1) — every prior epoch fully
         // committed, nothing of this epoch visible
         if (SnapshotStore.currentVersion(spark, root) != batchId + 1)
           consistent.set(false)
         applyImagesSnapshot(spark, root, batch, batchId)
-      }
-      .start()
-    q.awaitTermination()
-    val threeBatches = batches.get() == 3
+    }
+    val threeBatches = batches == 3
     // replay the LAST epoch: at-least-once redelivery must be a no-op
     val before = SnapshotStore.currentVersion(spark, root)
     applyImagesSnapshot(spark, root,
@@ -515,9 +470,10 @@ object Lakehouse {
 
   /** MERGE one batch of absolute row images as snapshot version
     * (batchId + 2): already-committed versions no-op (idempotent replay);
-    * otherwise the rewrite derives from v(batchId + 1) and commits
-    * expecting it, so any interleaving is a loud OCC conflict, never a
-    * silent half-state. */
+    * otherwise [[imagesStep]] derives the rewrite from v(batchId + 1) and
+    * the commit expects it, so any interleaving is a loud OCC conflict —
+    * never a silent half-state, and the loser's staged files are
+    * deleted. */
   private[graft] def applyImagesSnapshot(spark: SparkSession, root: String,
       batch: DataFrame, batchId: Long): Unit = {
     val want = batchId.toInt + 2
@@ -525,27 +481,13 @@ object Lakehouse {
     require(SnapshotStore.deleteVectors(spark, root, want - 1).isEmpty,
       s"applyImagesSnapshot: $root carries merge-on-read delete vectors; " +
         "the bare-COW CDC apply would resurrect tombstoned rows")
-    val cur = SnapshotStore.files(spark, root, want - 1).map(normPath)
-    val images = batch.localCheckpoint()
-    val keys = images.select(col("o_orderkey"))
-    val affected = affectedOfList(spark, cur, keys)
-    val zones = zonesOf(spark, cur, "o_orderkey")
-    val covered = images.join(broadcast(zones),
-      col("o_orderkey") >= col("lo") && col("o_orderkey") <= col("hi"),
-      "left_semi")
-    val uncovered = images.join(broadcast(zones),
-      col("o_orderkey") >= col("lo") && col("o_orderkey") <= col("hi"),
-      "left_anti")
-    val merged =
-      if (affected.isEmpty) uncovered
-      else spark.read.parquet(affected: _*)
-        .join(keys.withColumnRenamed("o_orderkey", "k"),
-          col("o_orderkey") === col("k"), "left_anti")
-        .unionByName(covered).unionByName(uncovered)
-    val staged = SnapshotStore.writeData(spark, root, merged, s"cdc_v$want")
-    SnapshotStore.commit(spark, root,
+    val (affected, merged, extra) = imagesStep(spark, batch)(
+      SnapshotStore.files(spark, root, want - 1).map(normPath))
+    val staged = SnapshotStore.writeData(spark, root,
+      (merged.toSeq ++ extra).reduce(_ unionByName _), s"cdc_v$want")
+    SnapshotStore.commitOrCleanup(spark, root,
       SnapshotStore.linesReplacing(spark, root, want - 1,
-        affected.toSet) ++ staged, want - 1)
+        affected.toSet) ++ staged, want - 1, staged)
   }
 
   private val streamCdcSnapSql =
@@ -622,19 +564,16 @@ object Lakehouse {
       }
       try {
         // carry meta lines and untouched files' annotations verbatim —
-        // only the affected data lines are replaced
+        // only the affected data lines are replaced; a lost race drops
+        // the never-referenced staged files, then the derivation re-runs
+        // against the winner's snapshot
         val kept = SnapshotStore.linesReplacing(spark, root, base,
           affected.toSet)
-        val v = SnapshotStore.commit(spark, root, kept ++ staged, base)
+        val v = SnapshotStore.commitOrCleanup(spark, root, kept ++ staged,
+          base, staged)
         return (v, affected.nonEmpty && affected.size < cur.size)
       } catch {
-        case _: SnapshotStore.CommitConflictException =>
-          // never published, so safe to drop; then re-derive from the
-          // winner's snapshot
-          val f = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-          staged.foreach(s =>
-            f.delete(new org.apache.hadoop.fs.Path(s), false))
-          attempt += 1
+        case _: SnapshotStore.CommitConflictException => attempt += 1
       }
     }
     throw new SnapshotStore.CommitConflictException(
@@ -668,9 +607,11 @@ object Lakehouse {
       .agg(max(col("o_orderkey"))).head().getLong(0)
   }
 
-  /** Zone-admissible files of `fl` for the keys in `keys` — the
-    * [[affectedFilesOf]] discovery over an explicit (manifest) file list
-    * instead of a directory. */
+  /** The files of `fl` whose [min,max] key interval covers at least one
+    * key of `keys` (uri paths) — the zone-map admissibility test run as
+    * one broadcast join, over a manifest's file list or a directory's.
+    * Conservative: covering-but-not-containing files are returned too
+    * (an extra rewrite, never a lost row). */
   private def affectedOfList(spark: SparkSession, fl: Seq[String],
       keys: DataFrame): Seq[String] = {
     val zones = zonesOf(spark, fl, "o_orderkey")

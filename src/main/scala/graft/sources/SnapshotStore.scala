@@ -319,6 +319,16 @@ object SnapshotStore {
       schema: org.apache.spark.sql.types.StructType): Seq[String] =
     schemaLine(schema) +: lines.filterNot(_.startsWith(SchemaPrefix))
 
+  /** `lines` stamped with `schema` when they hold neither a data line nor
+    * a schema line: a rewrite that empties a pre-DDL root (whose schema
+    * lived only in its data files' footers) still leaves a readable,
+    * zero-row table under the schema it was written with. */
+  def linesKeepingSchema(lines: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): Seq[String] =
+    if (lines.exists(l => l.startsWith(SchemaPrefix) ||
+        !(l.startsWith(MetaPrefix) || isAux(l)))) lines
+    else linesWithSchema(lines, schema)
+
   /** `version`'s meta lines only — what an INSERT OVERWRITE / TRUNCATE
     * carries forward: the schema and partition spec survive, every data
     * line and delete vector (which referenced the dropped data) goes. */
@@ -964,15 +974,29 @@ object SnapshotStore {
     val staging = new org.apache.hadoop.fs.Path(rootP, s"_graft_stage_$run")
     try {
       df.write.parquet(staging.toString)
-      f.listStatus(staging).map(_.getPath)
+      publish(spark, root, f.listStatus(staging).map(_.getPath)
         .filter(_.getName.endsWith(".parquet"))
-        .sortBy(_.getName).zipWithIndex.map { case (p, i) =>
-          val dst = new org.apache.hadoop.fs.Path(rootP,
-            s"${tag}_${run}_$i.parquet")
-          require(f.rename(p, dst), s"stage publish failed: $p -> $dst")
-          dst.toString
-        }.toList
+        .sortBy(_.getName).map(_.toString).toSeq, s"${tag}_$run")
     } finally f.delete(staging, true)
+  }
+
+  /** THE driver-side publish of staged data files: rename `staged` (in the
+    * given order) to `<root>/<prefix>_<i>.parquet` on the root's own
+    * filesystem and return the new paths. Every data writer of the
+    * snapshot layer ends here — [[writeData]], the catalog's fanout
+    * writes, merge-on-read deltas and streaming epochs — so one naming
+    * rule and one failure message cover them all. The files stay
+    * invisible until a manifest commit references them. */
+  def publish(spark: SparkSession, root: String, staged: Seq[String],
+      prefix: String): Seq[String] = {
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    val f = fs(spark, rootP)
+    staged.zipWithIndex.map { case (p, i) =>
+      val dst = new org.apache.hadoop.fs.Path(rootP, s"${prefix}_$i.parquet")
+      require(f.rename(new org.apache.hadoop.fs.Path(p), dst),
+        s"stage publish failed: $p -> $dst")
+      dst.toString
+    }.toList
   }
 
   // ---- per-file statistics in the manifest sidecar -------------------------

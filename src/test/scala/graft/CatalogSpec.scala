@@ -214,8 +214,71 @@ class CatalogSpec extends AnyFunSuite {
     val v1 = SnapshotStore.files(spark, root, 1).toSet
     val added = SnapshotStore.files(spark, root, 2).toSet -- v1
     assert(v1.subsetOf(SnapshotStore.files(spark, root, 2).toSet))
-    // the empty rewrite may still land as a zero-row file
-    assert(added.forall(f => spark.read.parquet(f).isEmpty))
+    // the empty rewrite stages no file, so it publishes none
+    assert(added.isEmpty)
+  }
+
+  test("a DELETE that empties exactly one file replaces that file with nothing") {
+    val root = freshTable("t_delfile")
+    val v1 = SnapshotStore.files(spark, root)
+    val victim = v1.head
+    val b = spark.read.parquet(victim).agg(min(col("k")), max(col("k")),
+      count(lit(1))).head()
+    // range clustering: the victim's key interval holds only its own rows
+    spark.sql(s"DELETE FROM graft.t_delfile WHERE k BETWEEN ${b.getLong(0)} " +
+      s"AND ${b.getLong(1)}")
+    assert(SnapshotStore.currentVersion(spark, root) == 2)
+    assert(SnapshotStore.files(spark, root).toSet == v1.toSet - victim)
+    assert(spark.table("graft.t_delfile").count() == 100 - b.getLong(2))
+  }
+
+  test("a DELETE of every row of a pre-DDL root keeps its schema readable") {
+    val root = freshTable("t_delall")
+    assert(SnapshotStore.schemaOf(spark, root).isEmpty) // footers only
+    spark.sql("DELETE FROM graft.t_delall WHERE k > 0")
+    assert(SnapshotStore.files(spark, root).isEmpty)
+    val t = spark.table("graft.t_delall")
+    assert(t.columns.toSeq == Seq("k", "v", "p"))
+    assert(t.count() == 0)
+    assert(SnapshotStore.read(spark, root).count() == 0)
+    // v1 still reads the pre-delete table
+    assert(spark.sql(
+      "SELECT count(*) FROM graft.t_delall VERSION AS OF 1").head().getLong(0) == 100)
+  }
+
+  test("catalog writer under task retry: only the committed attempt publishes") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val root = freshTable("t_retry")
+    val schema = spark.table("graft.t_retry").schema
+    val tbl = new graft.catalog.SnapshotTable(spark, "graft.t_retry", root,
+      SnapshotStore.currentVersion(spark, root))
+    val info = org.apache.spark.sql.connector.write.LogicalWriteInfoImpl(
+      "retryq", schema,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(),
+      java.util.Optional.empty[org.apache.spark.sql.types.StructType](),
+      java.util.Optional.empty[org.apache.spark.sql.types.StructType]())
+    val bw = new graft.catalog.SnapshotWrite(spark, tbl, info, None).toBatch
+    val fac = bw.createBatchWriterFactory(null)
+    // two attempts of partition 0 write the same rows; A aborts, B commits
+    def attempt(taskId: Long) = {
+      val w = fac.createWriter(0, taskId)
+      (500L to 504L).foreach(k =>
+        w.write(InternalRow(k, UTF8String.fromString(s"r$k"), 0.5)))
+      w
+    }
+    val a = attempt(10L); a.abort(); a.close()
+    val b = attempt(11L); val msgB = b.commit(); b.close()
+    bw.commit(Array(msgB))
+    assert(SnapshotStore.currentVersion(spark, root) == 2)
+    val added = SnapshotStore.files(spark, root, 2).toSet --
+      SnapshotStore.files(spark, root, 1)
+    assert(added.size == 1)
+    assert(spark.read.parquet(added.toSeq: _*).count() == 5)
+    val fresh = spark.table("graft.t_retry").where(col("k") >= 500)
+    assert(fresh.count() == 5 && fresh.select("k").distinct().count() == 5)
+    val leftovers = new java.io.File(root).list().filter(_.startsWith("_graft_stage"))
+    assert(leftovers.isEmpty, leftovers.mkString(","))
   }
 
   test("MERGE NOT MATCHED BY SOURCE: matched rows never take a by-source clause") {
@@ -557,6 +620,75 @@ class CatalogSpec extends AnyFunSuite {
     sw.commit(8L, Array(stage(3L, 503L)))
     assert(SnapshotStore.read(spark, root).count() == 102)
     assert(SnapshotStore.epochOf(spark, root, "rpq").contains(8L))
+  }
+
+  test("catalog writes report their rows and bytes as task output metrics") {
+    import java.util.concurrent.atomic.AtomicLong
+    val w = freshWarehouse()
+    spark.sql("DROP TABLE IF EXISTS graft.om_t")
+    spark.sql("CREATE TABLE graft.om_t (k BIGINT, g STRING) PARTITIONED BY (g)")
+    val root = s"$w/om_t"
+    val (recs, bytes) = (new AtomicLong, new AtomicLong)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          recs.addAndGet(m.outputMetrics.recordsWritten)
+          bytes.addAndGet(m.outputMetrics.bytesWritten)
+        }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sql(
+        """INSERT INTO graft.om_t
+          |SELECT id AS k, CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END AS g
+          |FROM range(1, 41)""".stripMargin)
+      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(recs.get == 40)
+    assert(bytes.get == SnapshotStore.files(spark, root)
+      .map(f => new java.io.File(SnapshotStore.uriPath(f)).length).sum)
+  }
+
+  test("streaming write declines an epoch whose table schema evolved mid-stream") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    val w = freshWarehouse()
+    spark.sql("DROP TABLE IF EXISTS graft.srn")
+    spark.sql("CREATE TABLE graft.srn (k BIGINT, v STRING)")
+    val ckpt = java.nio.file.Files.createTempDirectory("catspec_ck").toString
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val q = in.toDF().toDF("k", "v").writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(0))
+      .toTable("graft.srn")
+    try {
+      in.addData((1L, "a")); q.processAllAvailable()
+      spark.sql("ALTER TABLE graft.srn RENAME COLUMN v TO w")
+      in.addData((2L, "b"))
+      // the epoch's file was written with column `v`: committing it under
+      // the renamed schema would read its `w` as NULL
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(causes.exists {
+        case c: SnapshotStore.CommitConflictException =>
+          c.getMessage.contains("schema")
+        case _ => false
+      }, causes.map(_.toString).mkString(" <- "))
+    } finally q.stop()
+    val t = spark.table("graft.srn")
+    assert(t.columns.toSeq == Seq("k", "w"))
+    assert(t.where(col("w").isNull).isEmpty)
+    assert(t.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((1L, "a")))
+    // the declined epoch's published files were deleted, not leaked
+    val root = s"$w/srn"
+    assert(new java.io.File(root).list().filter(_.startsWith("strm_")).toSet ==
+      SnapshotStore.files(spark, root).map(_.split('/').last).toSet)
   }
 
   test("MoR write mode: catalog DELETE lands as delete vectors — no data file rewritten") {
